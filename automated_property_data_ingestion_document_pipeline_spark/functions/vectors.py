@@ -1,8 +1,10 @@
 """Vector expressions over array<float> embedding columns (SURVEY §2.9
 X5/X6): dot product, norms, cosine — via higher-order functions
-(``zip_with`` / ``aggregate``), which run as JVM codegen'd loops, not
-Python. Elements are cast to double BEFORE accumulation so Spark and the
-DuckDB oracle sum in the same precision and sequential order.
+(``zip_with`` / ``aggregate``). They run in the JVM, not Python, but
+Spark INTERPRETS their lambdas per element instead of compiling them
+into whole-stage codegen, so a per-pair fold is the dominant cost of a
+pair stage. Elements are cast to double BEFORE accumulation so Spark and
+the DuckDB oracle sum in the same precision and sequential order.
 """
 
 from __future__ import annotations

@@ -41,6 +41,18 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Bucket count of the persisted near-dup and anchor base tables. Every
+# join against a bucketed table runs at EXACTLY this many partitions
+# (co-partitioning admits no AQE coalesce/split), so it bounds both the
+# verify stage's parallelism and its per-partition sort size: r12 raised
+# 16 → 64 after the full-corpus lanes adopted the base — at sf10 the
+# pair-attach intermediate sorts tens of GB, and 64 partitions keeps
+# each sort inside the executor while still giving local[32] two task
+# waves. At 100 TB size it for 100-500 MB bucket files (rule of thumb
+# above) — the fingerprint stamp folds the count in, so retuning
+# rebuilds cleanly.
+BASE_BUCKETS = 64
+
 
 def write_bucketed(
     df: DataFrame,

@@ -263,7 +263,7 @@ def simhash64_df(
     Field width bounds shingle count at 2^21 per doc — far above any
     real document."""
     # tokens_col: read a PRE-tokenized array column instead of splitting
-    # text (r13 token-adoption A/B, scripts/token_adoption_ab.py) —
+    # text (r13 token-adoption A/B, SCALE_STUDY_sf1.json) —
     # every downstream expression is shared, so both paths hash
     # identically.
     if tokens_col is None:

@@ -65,7 +65,6 @@ def fan_out_if_narrow(df: DataFrame, width_factor: int = 1) -> DataFrame:
     if width_factor < 1:
         raise ValueError(f"width_factor must be >= 1, got {width_factor}")
     sc = df.sparkSession.sparkContext
-    width = sc.defaultParallelism * width_factor
-    if df.rdd.getNumPartitions() >= min(width, sc.defaultParallelism):
+    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
-    return df.repartition(width)
+    return df.repartition(sc.defaultParallelism * width_factor)

@@ -75,7 +75,6 @@ def grid_radius_join(
     small_xy: tuple[str, str],
     radius: int,
     broadcast_small: bool = True,
-    widen_probe: bool = False,
 ) -> DataFrame:
     """All (big, small) pairs within ``radius`` (planar integer units).
 
@@ -83,35 +82,15 @@ def grid_radius_join(
     broadcast — the shape of "parcels x county recorder offices". Set
     ``broadcast_small=False`` for two large sides: the join becomes a
     shuffled hash join on ``cell_id`` — still never a cartesian.
-    ``widen_probe=True`` fans a 1-split probe out to a task wave before
-    the join — the dense-corpus fix (8.2 → 1.0 s at sf1.0, see the
-    comment below), a measured LOSS on sparse inputs, hence opt-in.
 
     Output: all columns of both sides plus exact ``dist2`` (BIGINT
     squared distance). Column names must not collide across sides.
     """
     bx, by = big_xy
     sx, sy = small_xy
-    # r14, measured both ways: under the broadcast build the probe side
-    # inherits the SCAN's partitioning, so on a 1-split input the whole
-    # candidate enumeration + dist2 filter runs in one task — 8.2 s
-    # single-task at sf1.0, fixed to 1.0 s by fan_out_if_narrow on the
-    # probe. But at sf0.1 the same fan-out REGRESSES the lane (0.88 →
-    # 1.06 s interleaved: exchange + wave dispatch + the .rdd width
-    # probe cost more than the candidate work), and no static signal
-    # separates the two — the quadratic candidate CPU is invisible to
-    # byte estimates. So the fan-out is an explicit knob
-    # (``widen_probe``), following this repo's scale-caller pattern
-    # (banding granularity, LSH plane count): probes of 1-split inputs
-    # at >= sf1.0-class density should pass True.
-    probe = big
-    if widen_probe:
-        from automated_property_data_ingestion_document_pipeline_spark.operators.fanout import (
-            fan_out_if_narrow,
-        )
-
-        probe = fan_out_if_narrow(probe)
-    probe = probe.withColumn("cell_id", cell_of(F.col(bx), F.col(by), radius))
+    # Rejected (r14): fanning a 1-split probe out to a task wave took
+    # sf1.0 from 8.2 to 1.0 s but sf0.1 from 0.88 to 1.06 s (interleaved).
+    probe = big.withColumn("cell_id", cell_of(F.col(bx), F.col(by), radius))
     build = _with_neighbor_cells(small, sx, sy, radius)
     if broadcast_small:
         build = F.broadcast(build)

@@ -113,17 +113,45 @@ def range_join_buckets(
 
 
 def salted_join(
-    big: DataFrame, skewed_dim: DataFrame, key: str, salt_buckets: int = 8
+    salted: DataFrame,
+    replicated: DataFrame,
+    on: str,
+    salt_by: str,
+    salts: int,
 ) -> DataFrame:
-    """Skew mitigation: salt the big side's key, explode the dim side
-    across all salt values, join on (key, salt). AQE's skew-join split
-    usually suffices; this is the manual fallback for hot keys known in
-    advance (100 TB posture, SURVEY §7e)."""
-    salted_big = big.withColumn("_salt", (F.rand(seed=7) * salt_buckets).cast("int"))
-    salted_dim = skewed_dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+    """Equi-join on ``on`` with each key's work split ``salts`` ways —
+    the fix for a hot key, or for a quadratic pair stage whose
+    parallelism would otherwise be capped by the number of distinct
+    keys (AQE's skew split cannot divide a single key).
+
+    Every ``salted`` row gets ``_salt = pmod(xxhash64(salt_by), salts)``
+    (defined for negative, NULL and string ids, unlike ``id % salts``,
+    which is negative for negative ids and matches no replicated salt);
+    every ``replicated`` row is exploded over all ``salts`` values; the
+    join runs on ``(on, _salt)``, and ``_salt`` is dropped from the
+    output.
+
+    - The output does not depend on the salt: a salted row meets each
+      of its partners at exactly one salt, so the result equals the
+      plain join on ``on``.
+    - The salted side is repartitioned to ``defaultParallelism`` BY
+      NUMBER: a bare equi-join's exchange is coalesced by AQE by bytes,
+      which serializes a compute-bound stage on byte-tiny input, and an
+      explicit width is exempt from that coalescing.
+    - Spark sizes ``replicated`` BEFORE the explode, so it may broadcast
+      ``replicated`` × ``salts`` rows. The fan-out is a literal
+      ``sequence(0, salts - 1)`` (constant-folded, so the plan shows
+      what replicates); when both sides are corpus-scale, pin the join
+      by passing ``salted.hint("shuffle_hash")``.
+    """
+    width = salted.sparkSession.sparkContext.defaultParallelism
+    s = salted.withColumn(
+        "_salt", F.pmod(F.xxhash64(salt_by), F.lit(salts)).cast("int")
+    ).repartition(width, on, "_salt")
+    r = replicated.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
     )
-    return salted_big.join(salted_dim, [key, "_salt"]).drop("_salt")
+    return s.join(r, [on, "_salt"]).drop("_salt")
 
 
 def asof_join_nearest(

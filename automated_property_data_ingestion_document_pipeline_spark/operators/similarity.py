@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from automated_property_data_ingestion_document_pipeline_spark.functions.vectors import cosine, cosine_with_norms, dot, norm
+from automated_property_data_ingestion_document_pipeline_spark.operators.joins import salted_join
 
 # Deterministic pseudo-random hyperplanes: component h_{p,d} derived from
 # xxhash64(plane, dim) scaled to [-1, 1]. No RNG state → reproducible
@@ -807,12 +808,10 @@ SEM_DEDUP_MAX_CELLS = 4096
 #: studies and tests can see the valve's decision, not just its wall.
 LAST_SEMDEDUP_CELLS: "int | None" = None
 
-#: Salt fan for the pair stage (r14): splits each cluster's pair space
-#: S ways so a hot cluster cannot serialize the quadratic cosine stage
-#: (the same finding-79 salting the embedding near-dup lane uses, and
-#: the same S). Output-invariant — each pair meets in exactly one
-#: (cluster, salt) cell; the b-side replicates S×, the accepted linear
-#: cost of splitting a quadratic stage.
+#: Salt fan for the pair stage (r14): :func:`joins.salted_join` splits
+#: each cluster's pair space S ways so a hot cluster cannot serialize
+#: the quadratic cosine stage; the b-side replicates S×, the accepted
+#: linear cost of splitting a quadratic stage.
 SEM_DEDUP_SALTS = 8
 
 
@@ -831,9 +830,10 @@ def semantic_dedup(
 
     The cluster column bounds the pairwise comparison — the whole point
     of the cluster-then-dedup design: cost is sum(|cluster|^2), never
-    |corpus|^2, and the pair join is a plain equi-join on the cluster id
-    (AQE-splittable if one cluster runs hot). Upstream clustering can be
-    the corpus' own label, or :func:`centroid_assign` output at 100 TB.
+    |corpus|^2, and the pair join is an equi-join on the cluster id,
+    salted so one hot cluster spreads over :data:`SEM_DEDUP_SALTS`
+    tasks. Upstream clustering can be the corpus' own label, or
+    :func:`centroid_assign` output at 100 TB.
     Cosine is rounded to 6 places before thresholding, the same boundary
     contract as :func:`cosine_pairs`.
 
@@ -884,46 +884,25 @@ def semantic_dedup(
     # the pairwise filter drops from 3 O(d) folds to 1 — measured 5.1 s
     # -> below 2 s at sf0.1 on the 400k-pair corpus)
     #
-    # SALTED cluster join (r14 — the finding-79 pattern the embedding
-    # near-dup lane already uses): the pair stage's parallelism is
-    # capped at the number of distinct clusters (profiled: 10 labels at
-    # sf0.1 ⇒ the Σ|cluster|² cosine stage ran as ONE 1.34 s task after
-    # AQE coalesced the byte-tiny exchange — and one hot cluster
-    # serializes the same way at ANY scale, which AQE skew-join cannot
-    # split because a single key is unsplittable, guide §2.5). The
-    # a-side carries salt = id % S, the b-side replicates across all S
-    # salts, and pair (x, y) meets in exactly one (_cl, salt) cell — the
-    # OUTPUT is invariant, only the distribution changes. The explicit
-    # partition count is load-bearing: a bare equi-join's exchange is
-    # AQE-coalesced by BYTES, which under-provisions a compute-bound
-    # quadratic stage; repartition-by-number is exempt from coalescing
-    # and derives from defaultParallelism, never a local constant.
-    salts = SEM_DEDUP_SALTS
-    width = df.sparkSession.sparkContext.defaultParallelism
+    # The pair stage's parallelism is capped at the number of distinct
+    # clusters (10 labels at sf0.1 ran the Σ|cluster|² cosine stage as
+    # ONE 1.34 s task), so the cluster join is salted. Both sides are
+    # corpus-scale, so the join is pinned shuffle_hash, building from
+    # the unexploded salted side (the finding-93/94 mis-broadcast class).
     a = df.select(
         F.col(cluster_col).alias("_cl"),
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("_va"),
         norm(F.col(vec_col)).alias("_na"),
-        (F.col(id_col) % salts).cast("int").alias("_salt"),
-    ).repartition(width, "_cl", "_salt")
+    )
     b = df.select(
         F.col(cluster_col).alias("_cl"),
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("_vb"),
         norm(F.col(vec_col)).alias("_nb"),
-    ).withColumn("_salt", F.explode(F.array(*[F.lit(s) for s in range(salts)])))
-    # shuffle_hash pinned, building from the UNEXPLODED a-side: both
-    # sides are corpus-scale, so nothing here may broadcast — Spark
-    # sizes the b-side PRE-explode and would happily broadcast corpus ×
-    # S at 100 TB (the finding-93/94 mis-broadcast class; the registry
-    # tripwire test_finding94_no_new_explode_under_broadcast flagged
-    # exactly this when the salt landed unpinned). a's repartition
-    # already satisfies the join distribution, so the pin costs only
-    # b's own exchange.
+    )
     dominated = (
-        a.hint("shuffle_hash")
-        .join(b, ["_cl", "_salt"])
+        salted_join(a.hint("shuffle_hash"), b, "_cl", "id_a", SEM_DEDUP_SALTS)
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
             F.round(

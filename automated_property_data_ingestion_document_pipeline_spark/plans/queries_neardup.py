@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automated_property_data_ingestion_document_pipeline_spark import catalog
+from automated_property_data_ingestion_document_pipeline_spark.operators.bucketing import BASE_BUCKETS
+from automated_property_data_ingestion_document_pipeline_spark.operators.joins import salted_join
 from automated_property_data_ingestion_document_pipeline_spark.plans.registry import query
 from automated_property_data_ingestion_document_pipeline_spark.functions.text import WS_SPLIT
 from automated_property_data_ingestion_document_pipeline_spark.plans.queries_text import _ANCHOR_LEN
@@ -43,16 +45,6 @@ _JACC_MIN = 0.3  # verification threshold on exact Jaccard
 # queries_text._ensure_xx_base). The b-raising direction (8x2) filled
 # 43 GB of scratch with candidate shuffle and died ENOSPC at sf10 —
 # never widen bands at scale.
-# Bucket count for the persisted banded-base tables. Every join against
-# a bucketed table runs at EXACTLY this many partitions (co-partitioning
-# admits no AQE coalesce/split), so it bounds both the verify stage's
-# parallelism and its per-partition sort size: r12 raised 16 → 64 after
-# the full-corpus lanes adopted the base — at sf10 the pair-attach
-# intermediate sorts tens of GB, and 64 partitions keeps each sort
-# inside the executor while still giving local[32] two task waves. At
-# 100 TB you size it for 100-500 MB bucket files (bucketing.py rule of
-# thumb) — the stamp folds the count in, so retuning rebuilds cleanly.
-_BASE_BUCKETS = 64
 
 
 def _sig_cols_sql() -> str:
@@ -118,50 +110,6 @@ def _portable_shingles(docs: DataFrame) -> DataFrame:
     return toks.select("doc_id", F.explode(grams).alias("sh")).distinct()
 
 
-def _portable_sig(shingles: DataFrame, k: int = _K) -> DataFrame:
-    """``k``-way seeded-min md5 signature: one grouped aggregate to
-    (doc_id, s0..s{k-1}). Split out of :func:`_portable_bands` (r14) so
-    the incremental probe can cut lineage HERE — the 4-way band union
-    re-runs this aggregate's final stage per branch otherwise (measured
-    4 × ~0.6 s at sf0.1: the md5-of-every-shingle × k CPU)."""
-    return shingles.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("sh")))).alias(f"s{s}")
-            for s in range(k)
-        ]
-    )
-
-
-def _bands_from_sig(
-    sig: DataFrame, bands: int = _BANDS, rows: int = _K // _BANDS
-) -> DataFrame:
-    """``bands`` row-local band hashes over a precomputed signature,
-    unioned to (doc_id, band, bh).
-
-    r13 tried a one-pass posexplode here instead of the bands-way
-    unionByName (the union re-runs the signature aggregate's final
-    stage per branch; the explode measured 0.74 → 0.50 s warm on the
-    isolated bands step, row-identical output) — and REVERTED it: a
-    Generate in the delta-bands subtree changes its size estimate,
-    and the COMPOSED q_neardup_incremental probe regressed ~2x on a
-    same-floor A/B (explode 6.8-10.8 s median-of-3 across two fresh
-    processes vs union 4.7 s on the same slowed machine floor; both
-    forms ~2.3 s on the earlier fast floor). Plan stability under
-    estimate drift beats the one-stage saving — keep the union. (r14
-    removes the per-branch aggregate re-run a different way: the
-    incremental probe checkpoints the signature, so each branch is a
-    row-local projection over a LogicalRDD.)"""
-    out = None
-    for b in range(bands):
-        part = sig.select(
-            "doc_id",
-            F.lit(b).alias("band"),
-            F.md5(F.concat(*[F.col(f"s{b * rows + i}") for i in range(rows)])).alias("bh"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
 def _portable_bands(
     shingles: DataFrame, bands: int = _BANDS, rows: int = _K // _BANDS
 ) -> DataFrame:
@@ -173,8 +121,33 @@ def _portable_bands(
     knob exists for the granularity study (scripts/banding_ab.py):
     at fixed verification threshold, more rows per band tightens the
     LSH s-curve and shrinks the candidate pair stream (the Σ n_b²
-    spill source at sf10) at the cost of a wider signature."""
-    return _bands_from_sig(_portable_sig(shingles, bands * rows), bands, rows)
+    spill source at sf10) at the cost of a wider signature.
+
+    r13 tried a one-pass posexplode instead of the bands-way
+    unionByName (the union re-runs the signature aggregate's final
+    stage per branch; the explode measured 0.74 → 0.50 s warm on the
+    isolated bands step, row-identical output) — and REVERTED it: a
+    Generate in the delta-bands subtree changes its size estimate,
+    and the COMPOSED q_neardup_incremental probe regressed ~2x on a
+    same-floor A/B (explode 6.8-10.8 s median-of-3 across two fresh
+    processes vs union 4.7 s on the same slowed machine floor; both
+    forms ~2.3 s on the earlier fast floor). Plan stability under
+    estimate drift beats the one-stage saving — keep the union."""
+    sig = shingles.groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("sh")))).alias(f"s{s}")
+            for s in range(bands * rows)
+        ]
+    )
+    out = None
+    for b in range(bands):
+        part = sig.select(
+            "doc_id",
+            F.lit(b).alias("band"),
+            F.md5(F.concat(*[F.col(f"s{b * rows + i}") for i in range(rows)])).alias("bh"),
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
 
 
 def ensure_portable_base(
@@ -231,7 +204,7 @@ def ensure_portable_base(
     bydoc_t = f"b_nd_shingles_bydoc_{tag}"
     bands_t = f"b_nd_bands_{tag}"
     sz_t = f"b_nd_sizes_{tag}"
-    nb = _BASE_BUCKETS
+    nb = BASE_BUCKETS
     docs = catalog.load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     bucketing.ensure_bucketed(
         spark, sh_t, ["doc_id", "sh"], fp,
@@ -625,40 +598,28 @@ def embedding_neardup_portable_lane(
 
     base = cut_lineage(base, durable=False)
     # SALTED bucket join (finding 79): 2^planes buckets cap the equi-join's
-    # parallelism at 16 tasks — and when the corpus side fits the broadcast
+    # parallelism at 16 tasks, and when the corpus side fits the broadcast
     # threshold the quadratic verify inherits the SCAN's partitioning (ONE
-    # file split at sf1.0 → 111 s on one core). Salting splits each
-    # bucket's pair space S ways: the a-side carries salt = id % S, the
-    # b-side replicates across all S salts, and pair (x, y) matches in
-    # exactly one (bucket, salt) cell — the OUTPUT is invariant (the
-    # oracle never sees the salt), only the distribution changes. The
-    # explicit repartition on the probe side is load-bearing: Spark sizes
-    # the b side PRE-explode and broadcasts it, so without the exchange
-    # the quadratic stage inherits however few splits the scan produced.
-    # r14: the repartition carries an EXPLICIT width — without a number
-    # AQE coalesces the byte-tiny exchange to one partition and the
-    # quadratic cosine stage serializes (profiled 1.44 s single-task);
-    # repartition-by-number is exempt from coalescing, and the width is
-    # defaultParallelism-derived, never a local constant.
-    width = base.sparkSession.sparkContext.defaultParallelism
+    # file split at sf1.0 → 111 s on one core). Left unpinned: a
+    # shuffle_hash pin measured one more hash exchange (3 → 4) at both
+    # sf0.001 and sf0.1.
     a = base.select(
         "bucket",
         F.col("vec_id").alias("id_a"),
         F.col("v").alias("_va"),
         F.col("nrm").alias("_na"),
-        (F.col("vec_id") % salts).cast("int").alias("salt"),
-    ).repartition(width, "bucket", "salt")
+    )
     b = base.select(
         "bucket",
         F.col("vec_id").alias("id_b"),
         F.col("v").alias("_vb"),
         F.col("nrm").alias("_nb"),
-    ).withColumn("salt", F.explode(F.array(*[F.lit(s) for s in range(salts)])))
+    )
     cos = F.round(
         cosine_with_norms(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")), 6
     )
     pa = (
-        a.join(b, ["bucket", "salt"])
+        salted_join(a, b, "bucket", "id_a", salts)
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("bucket")
         .agg(
@@ -1106,10 +1067,9 @@ def _probe_delta(
     #   exec→build) — the md5 CPU lives in the PARTIAL (map-side)
     #   aggregate, which all four branches already share through
     #   ReusedExchange; the per-branch re-run is only the final
-    #   min-of-mins over |delta| rows. Reverted; the helper split
-    #   (_portable_sig/_bands_from_sig) stays, plan-neutral.
+    #   min-of-mins over |delta| rows. Reverted.
     # The lane's remaining sf0.1 wall is the fixed 64-task dispatch of
-    # the three bucketed-base merge-join stages (_BASE_BUCKETS = 64,
+    # the three bucketed-base merge-join stages (BASE_BUCKETS = 64,
     # sized for sf10 sort memory — see the constant's comment), which
     # is the correct trade at scale.
     from automated_property_data_ingestion_document_pipeline_spark.lineage import cut_lineage

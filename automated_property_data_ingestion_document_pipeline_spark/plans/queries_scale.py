@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automated_property_data_ingestion_document_pipeline_spark import catalog
+from automated_property_data_ingestion_document_pipeline_spark.operators.joins import salted_join
 from automated_property_data_ingestion_document_pipeline_spark.plans._sql import (
     money_sum_sql,
 )
@@ -301,26 +302,18 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigated equijoin, the join-side sibling of q_salted_agg:
-    the fact side gets a per-row salt (hash of its unique id mod 8),
-    the profile side is replicated across all 8 salts (explode of a
-    literal range — 8× a SMALL side, never the fact side), and the join
-    key becomes (user_id, salt) so one hot user spreads over 8 reducers
-    instead of melting one. The oracle is the PLAIN join — salting is
-    result-invariant by construction (each fact row matches exactly its
-    original partner, at exactly one salt). At 100 TB this is the
-    fallback when AQE skew-split can't help (e.g. the skewed side feeds
-    a window next); timestamps diff in exact integer micros so the
-    output is bit-portable."""
+    :func:`joins.salted_join` salts the fact side by event_id over 8
+    salts and replicates the profile side, so one hot user spreads over
+    8 reducers instead of melting one. The oracle is the PLAIN join —
+    salting is result-invariant. At 100 TB this is the fallback when
+    AQE skew-split can't help (e.g. the skewed side feeds a window
+    next); timestamps diff in exact integer micros so the output is
+    bit-portable."""
     ev = catalog.load(spark, sf_dir, "events")
     prof = ev.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"), F.count("*").alias("n")
     )
-    n_salts = 8
-    fact = ev.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salts)).cast("int"))
-    prof_rep = prof.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    return fact.join(prof_rep, ["user_id", "_salt"]).select(
+    return salted_join(ev, prof, "user_id", "event_id", 8).select(
         "event_id",
         "user_id",
         F.col("n").cast("bigint").alias("user_events"),

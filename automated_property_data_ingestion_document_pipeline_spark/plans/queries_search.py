@@ -139,9 +139,9 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bm25_from_tk(tk_df: DataFrame) -> DataFrame:
     """BM25 over a (doc_id, tk array<string>) relation — the whole plan
-    below the tokenize step, shared verbatim by the registered lane and
-    the persisted-token A/B variant (scripts/token_adoption_ab.py) so
-    the comparison isolates exactly the tokenize-vs-read cost."""
+    below the tokenize step, split out for the r13 persisted-token A/B
+    (SCALE_STUDY_sf1.json ``token_adoption_ab_sf1``) so the comparison
+    isolated exactly the tokenize-vs-read cost."""
     docs = tk_df.withColumn(
         "doc_len", F.size("tk").cast("bigint")
     ).filter(F.col("doc_len") > 0)

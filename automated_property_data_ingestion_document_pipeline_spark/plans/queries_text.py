@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from automated_property_data_ingestion_document_pipeline_spark import catalog
 from automated_property_data_ingestion_document_pipeline_spark.functions import text as T
 from automated_property_data_ingestion_document_pipeline_spark.operators import dedup
+from automated_property_data_ingestion_document_pipeline_spark.operators.bucketing import BASE_BUCKETS
 from automated_property_data_ingestion_document_pipeline_spark.plans.registry import query
 from automated_property_data_ingestion_document_pipeline_spark.functions.text import WS_SPLIT
 
@@ -464,11 +465,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- MinHash LSH near-dup (rows-only) -----------------------------------------
 
-# xxhash-lane persisted-base bucket count — same sizing logic as
-# queries_neardup._BASE_BUCKETS (the verify joins run at exactly this
-# many partitions; 64 bounds sf10 sort sizes and keeps 32 cores busy)
-_XX_BASE_BUCKETS = 64
-
 
 def _ensure_xx_base(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build-once-per-corpus persistence of the PRODUCTION (xxhash64)
@@ -507,7 +503,7 @@ def _ensure_xx_base(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
     bands_t = f"b_nd_xx_bands_{tag}"
     sets_t = f"b_nd_xx_sets_{tag}"
-    nb = _XX_BASE_BUCKETS
+    nb = BASE_BUCKETS
     d = catalog.load(spark, sf_dir, "documents")
     bucketing.ensure_bucketed(
         spark, bands_t, ["band_idx", "band_hash"], fp,
@@ -548,7 +544,7 @@ def ensure_token_base(spark: SparkSession, sf_dir: str) -> str:
         + ":v1:tok ws"
     )
     tok_t = f"b_tok_arrays_{tag}"
-    nb = _XX_BASE_BUCKETS
+    nb = BASE_BUCKETS
     d = catalog.load(spark, sf_dir, "documents")
     bucketing.ensure_bucketed(
         spark, tok_t, "doc_id", fp,
@@ -1097,7 +1093,7 @@ def ensure_anchor_base(spark: SparkSession, sf_dir: str) -> str:
         + f":v1:anchors{_ANCHOR_LEN}"
     )
     t = f"b_nd_anchors_{tag}"
-    nb = _XX_BASE_BUCKETS
+    nb = BASE_BUCKETS
     d = catalog.load(spark, sf_dir, "documents")
     bucketing.ensure_bucketed(
         spark, t, "g", fp,
@@ -1335,8 +1331,8 @@ def q_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _skipgram_pmi_from_toks(toks_df: DataFrame) -> DataFrame:
     """Skip-gram PMI over a (tk array<string>) relation — the plan
-    below the tokenize, shared by the registered lane and the
-    persisted-token A/B variant (scripts/token_adoption_ab.py)."""
+    below the tokenize, split out for the r13 persisted-token A/B
+    (SCALE_STUDY_sf1.json ``token_adoption_ab_sf1``)."""
     tk = F.col("tk")
 
     def skip_pairs(dist: int):

@@ -274,8 +274,9 @@ def preflight_quiet(
 _FIRST_GATED_ROUND = 12
 
 
-def load_round_baseline() -> tuple[str, dict, bool] | None:
-    """Latest GATE-PASSING BENCH_r{N}.json beside this file →
+def load_round_baseline(here: str | None = None) -> tuple[str, dict, bool] | None:
+    """Latest GATE-PASSING BENCH_r{N}.json in ``here`` (default: beside
+    this file) →
     (name, per-query secs, gate_passing). Gate-passing = the round ran
     under the pre-flight quiet gate (N >= 12) and was not stamped
     ``degraded`` (a false flag is DELETED from the line to fit the
@@ -286,7 +287,7 @@ def load_round_baseline() -> tuple[str, dict, bool] | None:
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
+    here = here or os.path.dirname(os.path.abspath(__file__))
     # r14: match ONLY the canonical BENCH_r{N}.json — the driver also
     # writes suffixed variants at other core counts (BENCH_r13_c8.json,
     # the 8-core scaling run) and the loose prefix match here picked one

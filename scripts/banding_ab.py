@@ -90,8 +90,8 @@ def run_portable(spark, variants: list[tuple[int, int]]) -> None:
                 spark, bands_t, ["band", "bh"], fp,
                 lambda: qn._portable_bands(
                     spark.table(sh_t), bands=b, rows=r
-                ).repartition(qn._BASE_BUCKETS, "band", "bh"),
-                num_buckets=qn._BASE_BUCKETS,
+                ).repartition(bucketing.BASE_BUCKETS, "band", "bh"),
+                num_buckets=bucketing.BASE_BUCKETS,
             )
             build_sec = round(time.perf_counter() - t0, 3)
 
@@ -145,8 +145,8 @@ def run_xx(spark, variants: list[tuple[int, int]], with_cc: bool) -> None:
                 spark, bands_t, ["band_idx", "band_hash"], fp,
                 lambda: dedup.minhash_banded_df(
                     d, num_hashes=h, bands=b, shingle_k=3
-                ).repartition(qt._XX_BASE_BUCKETS, "band_idx", "band_hash"),
-                num_buckets=qt._XX_BASE_BUCKETS,
+                ).repartition(bucketing.BASE_BUCKETS, "band_idx", "band_hash"),
+                num_buckets=bucketing.BASE_BUCKETS,
             )
             build_sec = round(time.perf_counter() - t0, 3)
 

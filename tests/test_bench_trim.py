@@ -45,12 +45,21 @@ def test_trim_second_emits_int_type_for_integral():
     assert isinstance(v, float)
 
 
-def test_round_baseline_ignores_core_count_variants():
+def test_round_baseline_ignores_core_count_variants(tmp_path):
     """load_round_baseline must pick the canonical BENCH_r{N}.json, not
     a suffixed variant at another core count (BENCH_r13_c8.json is the
     driver's 8-core scaling run — comparing a 32-core run against it
-    corrupts every delta_x)."""
-    picked = bench.load_round_baseline()
+    corrupts every delta_x). Synthetic files, so the answer does not
+    depend on which rounds are committed."""
+
+    def write(name, **parsed):
+        (tmp_path / name).write_text(json.dumps({"parsed": {"queries": {"q": 1.0}, **parsed}}))
+
+    write("BENCH_r12.json")
+    write("BENCH_r13.json")
+    write("BENCH_r13_c8.json")
+    write("BENCH_r14_c8.json")
+    picked = bench.load_round_baseline(str(tmp_path))
     assert picked is not None
     name, _, gate = picked
     assert name == "BENCH_r13.json"

@@ -73,24 +73,3 @@ def test_tile_aggregate_counts(spark):
     got = {(r.tile_x, r.tile_y): r.n for r in out.collect()}
     assert got == {(0, 0): 2, (1, 0): 1, (-1, 0): 1}
 
-
-def test_grid_radius_join_widen_probe_is_row_identical(spark, sf_dir):
-    """The r14 dense-corpus knob: widen_probe=True fans the probe side
-    out before the broadcast join; pairs and distances must be
-    byte-identical to the default path (the fan-out only moves rows)."""
-    from automated_property_data_ingestion_document_pipeline_spark.plans import (
-        queries_geo as qg,
-    )
-
-    cust = qg._customers_xy(spark, sf_dir)
-    supp = qg._suppliers_xy(spark, sf_dir)
-    args = (cust, supp, ("cx", "cy"), ("sx", "sy"), qg._RADIUS)
-    base = sorted(
-        map(tuple, geo.grid_radius_join(*args).select(
-            "c_custkey", "s_suppkey", "dist2").collect())
-    )
-    wide = sorted(
-        map(tuple, geo.grid_radius_join(*args, widen_probe=True).select(
-            "c_custkey", "s_suppkey", "dist2").collect())
-    )
-    assert base == wide and len(base) > 0

@@ -37,7 +37,14 @@ def _files(ext: str) -> list[str]:
     return sorted(glob.glob(os.path.join(REPORTS, f"*.{ext}")))
 
 
-@pytest.mark.parametrize("path", _files("docx"), ids=os.path.basename)
+def _file_id(path) -> str | None:
+    # with the corpus absent the parameter list is empty and pytest
+    # passes a placeholder, not a path; None keeps its default id so
+    # the module skipif applies instead of a collection error
+    return os.path.basename(path) if isinstance(path, str) else None
+
+
+@pytest.mark.parametrize("path", _files("docx"), ids=_file_id)
 def test_reference_docx_extracts_real_text(path):
     lines = extract_docx_text(open(path, "rb").read())
     text = " ".join(lines)
@@ -46,7 +53,7 @@ def test_reference_docx_extracts_real_text(path):
     assert "Agreement" in text or "agreement" in text or "Engagement" in text
 
 
-@pytest.mark.parametrize("path", _files("pdf"), ids=os.path.basename)
+@pytest.mark.parametrize("path", _files("pdf"), ids=_file_id)
 def test_reference_pdf_extracts_real_text(path):
     lines = extract_pdf_text(open(path, "rb").read())
     text = " ".join(lines)

@@ -82,16 +82,24 @@ def test_archive_batch_replay_is_idempotent(spark):
 
 
 def test_salted_join_matches_plain_join(spark):
-    big = spark.createDataFrame(
-        [(i % 3, f"row{i}") for i in range(300)], "k int, payload string"
+    """The salt must never lose or duplicate a pair: on negative, NULL
+    and string salt ids, NULL join keys and one hot key, the salted
+    join returns exactly the plain join's rows (as a multiset)."""
+    from collections import Counter
+
+    rows = [(i - 150 if i % 7 else None, f"s{i}", 0 if i % 4 else i % 3) for i in range(300)]
+    rows += [(-1, None, 1), (5, "s5", None)]  # NULL string id; NULL join key
+    big = spark.createDataFrame(rows, "id int, sid string, k int")
+    dim = spark.createDataFrame(
+        [(0, "zero"), (1, "one"), (2, "two"), (None, "null")], "k int, label string"
     )
-    dim = spark.createDataFrame([(0, "zero"), (1, "one"), (2, "two")], "k int, label string")
-    salted = salted_join(big, dim, "k", salt_buckets=4)
-    plain = big.join(dim, "k")
-    assert salted.count() == plain.count() == 300
-    s = {(r["payload"], r["label"]) for r in salted.collect()}
-    p = {(r["payload"], r["label"]) for r in plain.collect()}
-    assert s == p
+    plain = Counter(map(tuple, big.join(dim, "k").select("id", "sid", "k", "label").collect()))
+    assert sum(plain.values()) == 301
+    for salt_by in ("id", "sid"):
+        salted = salted_join(big, dim, "k", salt_by, 4)
+        assert salted.columns == big.join(dim, "k").columns  # no _salt leaks
+        got = Counter(map(tuple, salted.select("id", "sid", "k", "label").collect()))
+        assert got == plain, salt_by
 
 
 def test_udtf_extracts_all_pairs_with_lateral_fanout(spark):
