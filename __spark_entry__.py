@@ -95,7 +95,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #
 # Seeded for one round: the three lanes moved onto joins.salted_join
 # (its salt differs from their old ones, the output must not), and the
-# r14-rewritten lanes that no driver run has re-witnessed yet.
+# r14-rewritten lanes that no driver run has re-witnessed yet, and the
+# two PageRank lanes moved onto the adjacency-list loop (same integer
+# contributions, so q_pagerank_portable's output must not change).
 _MANUAL_PRIORITY: list[str] = [
     "q_semantic_dedup",
     "q_embedding_neardup_portable",
@@ -103,6 +105,8 @@ _MANUAL_PRIORITY: list[str] = [
     "q_rfm_segments",
     "q_star_join",
     "q_groupby_agg",
+    "q_pagerank_portable",
+    "q_pagerank",
 ]
 
 

@@ -21,7 +21,7 @@ vertex owns it).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from automated_property_data_ingestion_document_pipeline_spark.lineage import cut_lineage
@@ -114,6 +114,63 @@ def triangles_per_lowest_vertex(edges: DataFrame, src: str, dst: str) -> DataFra
     return closed.select(tri_min).groupBy("u").agg(F.count("*").alias("n_tri"))
 
 
+def _adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Checkpointed adjacency list ``(s, ds array<long>, odeg)`` of the
+    undirected graph: each canonical edge walks both ways (so no node
+    dangles), one row per node, so ``count()`` is |V|. The eager cut is
+    the only read of ``edges``. Hub bound: a node's whole neighbour list
+    is one row, 8 bytes per neighbour, in one task — as in an edge list
+    hash-partitioned by ``s``, which also puts a hub in one task."""
+    ce = canonical_edges(edges, src, dst)
+    both = ce.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
+        ce.select(F.col("v").alias("s"), F.col("u").alias("d"))
+    )
+    adj = both.groupBy("s").agg(F.collect_list("d").alias("ds"))
+    return cut_lineage(adj.withColumn("odeg", F.size("ds")), eager=True)
+
+
+def _power_iterate(
+    adj: DataFrame,
+    iterations: int,
+    rank_col: str,
+    rank0: Column,
+    contrib: Column,
+    update: Column,
+) -> DataFrame:
+    """The power-iteration loop both PageRanks share. ``contrib`` is a
+    neighbour's share of its source's rank (over ``rank_col`` and
+    ``odeg``), ``update`` the new rank from the summed shares ``csum``.
+    Returns ``(node, rank_col)``, every node starting at ``rank0``.
+
+    Round 1 needs no join: every rank is ``rank0``. Later rounds join
+    |V| adjacency rows with |V| ranks on ``s``, then ``explode(ds)`` and
+    sum by node, so edge rows never reach a shuffle. Lineage is cut
+    every FOURTH round and at the end (r13, still right): the ranks
+    chain grows a join + an aggregation per round, and a 4-deep window
+    keeps Catalyst cost flat for 2 eager jobs per 8 rounds; one cut per
+    8 rounds measured slower. Cadence never changes the dataflow.
+
+    Measured and NOT adopted (isolated A/B, sf0.1, 4 cores, 8-12 reps):
+    an edge list repartitioned by ``s`` with a shuffle-hash pin ran the
+    same 28 jobs no faster (2.76-3.09 s vs 2.74 s); neighbour lists
+    capped at 1 024 per row need the degree join back and lost the gain
+    (2.84 vs 2.22 s); AQE off ran 13 jobs instead of 28 in the same
+    wall time. Job count is not the lever; re-scanning and joining the
+    edges was."""
+    ranks = adj.select("s", rank0.alias(rank_col))
+    for i in range(iterations):
+        rows = adj.withColumn(rank_col, rank0) if i == 0 else adj.join(ranks, "s")
+        ranks = (
+            rows.select(F.explode("ds").alias("s"), contrib.alias("c"))
+            .groupBy("s")
+            .agg(F.sum("c").alias("csum"))
+            .select("s", update.alias(rank_col))
+        )
+        if i % 4 == 3 or i == iterations - 1:
+            ranks = cut_lineage(ranks, eager=True)
+    return ranks.withColumnRenamed("s", "node")
+
+
 def pagerank(
     edges: DataFrame,
     src: str,
@@ -125,46 +182,19 @@ def pagerank(
     both ways, so no dangling mass). Returns (node, rank) with
     sum(rank) == |V| up to float associativity.
 
-    Per iteration: ranks join onto edges by source (shuffle on node id),
-    contributions aggregate by destination (second shuffle), then the
-    damping update. :func:`cut_lineage` truncates lineage each round
-    (localCheckpoint locally, reliable checkpoint when the session has a
-    checkpoint dir — r10 verdict ask #6) —
-    the same iterative-plan hygiene as the connected-components operator
-    (operators/dedup.py): without it the plan doubles per iteration and
-    the 8th round recompiles a 2^8-deep tree. Iteration count is a fixed
-    budget (power iteration converges geometrically at `damping` rate);
-    callers needing a tolerance loop can inspect successive deltas the
-    same way dedup.LAST_CC_ROUNDS is surfaced."""
-    ce = canonical_edges(edges, src, dst)
-    both = ce.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
-        ce.select(F.col("v").alias("s"), F.col("u").alias("d"))
+    Plan: :func:`_power_iterate` over the checkpointed
+    :func:`_adjacency` list; :func:`cut_lineage` makes the cuts reliable
+    checkpoints when the session has a checkpoint dir. Iteration count
+    is a fixed budget (power iteration converges geometrically at
+    `damping` rate)."""
+    return _power_iterate(
+        _adjacency(edges, src, dst),
+        iterations,
+        "rank",
+        F.lit(1.0),
+        F.col("rank") / F.col("odeg"),
+        F.lit(1.0 - damping) + F.lit(damping) * F.col("csum"),
     )
-    outdeg = both.groupBy("s").agg(F.count("*").alias("odeg"))
-    adj = cut_lineage(both.join(outdeg, "s"), eager=True)
-    ranks = outdeg.select(F.col("s").alias("node"), F.lit(1.0).alias("rank"))
-    # r14: same every-4th-iteration checkpoint cadence as
-    # pagerank_fixedpoint (adopted there in r13: the ranks chain grows
-    # LINEARLY per round, so a 4-deep window keeps Catalyst cost flat
-    # while paying 2 eager checkpoint jobs per 8 rounds instead of 8).
-    # The cadence changes WHEN lineage is materialized, never the
-    # dataflow, so the computed ranks are unchanged (the lane stays
-    # rows-only at the driver for the usual double-associativity
-    # reason, which is independent of cadence).
-    for i in range(iterations):
-        contrib = (
-            adj.join(ranks, adj["s"] == ranks["node"])
-            .select(F.col("d").alias("node"), (F.col("rank") / F.col("odeg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
-        ranks = contrib.select(
-            "node",
-            (F.lit(1.0 - damping) + F.lit(damping) * F.col("csum")).alias("rank"),
-        )
-        if i % 4 == 3 or i == iterations - 1:
-            ranks = cut_lineage(ranks, eager=True)
-    return ranks
 
 
 def pagerank_fixedpoint(
@@ -185,10 +215,8 @@ def pagerank_fixedpoint(
     Per-node rank starts at ``scale`` (the float form's 1.0); each
     iteration is ``base + 17 * sum(rank // odeg) // 20`` — floor
     division at both sites, on values that are strictly positive, so
-    Spark's ``div`` (truncate) and an oracle's floor-div agree. The
-    plan shape is identical to the float form: two shuffles per
-    iteration with :func:`cut_lineage` lineage cuts (reliable checkpoint
-    when the session has a checkpoint dir).
+    Spark's ``div`` (truncate) and an oracle's floor-div agree. Same
+    loop as the float form (:func:`_power_iterate`).
 
     Overflow bound, ENFORCED (r07 advice — Spark's non-ANSI long
     arithmetic wraps silently while a BIGINT oracle errors, a
@@ -201,16 +229,10 @@ def pagerank_fixedpoint(
     carries 9 exact decimal digits of rank). An EXPLICIT ``scale``
     (the static-SQL-oracle contract, which bakes the unit into the
     replayed CTE) is validated against the same bound and raises a
-    typed ``ValueError`` instead of wrapping. Node counting is one
-    ``countDistinct`` over the checkpointed adjacency — an O(|V|)
-    aggregate, not a collect."""
-    ce = canonical_edges(edges, src, dst)
-    both = ce.select(F.col("u").alias("s"), F.col("v").alias("d")).unionAll(
-        ce.select(F.col("v").alias("s"), F.col("u").alias("d"))
-    )
-    outdeg = both.groupBy("s").agg(F.count("*").alias("odeg"))
-    adj = cut_lineage(both.join(outdeg, "s"), eager=True)
-    n_nodes = adj.select(F.countDistinct("s").alias("n")).first()["n"] or 1
+    typed ``ValueError`` instead of wrapping. |V| is the adjacency
+    list's ``count()``."""
+    adj = _adjacency(edges, src, dst)
+    n_nodes = adj.count() or 1
     scale_max = (2**63 - 1) // (17 * n_nodes)
     if scale is None:
         scale = 10**12
@@ -226,35 +248,11 @@ def pagerank_fixedpoint(
             f"pagerank_fixedpoint overflow: 17 * |V|({n_nodes}) * "
             f"scale({scale}) exceeds 2^63; max safe scale is {scale_max}"
         )
-    base = 3 * scale // 20
-    ranks = outdeg.select(
-        F.col("s").alias("node"), F.lit(scale).cast("long").alias("rank_fp")
+    return _power_iterate(
+        adj,
+        iterations,
+        "rank_fp",
+        F.lit(scale).cast("long"),
+        F.expr("rank_fp div odeg"),
+        (F.lit(3 * scale // 20) + F.expr("(17 * csum) div 20")).cast("long"),
     )
-    # r13: lineage is cut every FOURTH iteration (and at the end), not
-    # every iteration. The ranks chain grows LINEARLY per round (one
-    # join + one agg), so a 4-deep window keeps Catalyst cost flat while
-    # paying 2 eager checkpoint jobs per 8 rounds instead of 8 —
-    # measured 3.4 → 2.4-2.5 s warm at sf0.1 with BIT-IDENTICAL ranks
-    # (integer arithmetic is cadence-independent), same 16 exchanges /
-    # 7.95 MB. every=8 (one cut) re-regressed to ~2.9 s: an 8-deep
-    # join chain costs more planning than the saved job. On a cluster
-    # (reliable checkpoints) the cadence also quarters the checkpoint
-    # writes; the recovery window widens to 4 rounds of shuffle files,
-    # which the shuffle service already retains.
-    for i in range(iterations):
-        contrib = (
-            adj.join(ranks, adj["s"] == ranks["node"])
-            .select(
-                F.col("d").alias("node"),
-                F.expr("rank_fp div odeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
-        ranks = contrib.select(
-            "node",
-            (F.lit(base) + F.expr("(17 * csum) div 20")).cast("long").alias("rank_fp"),
-        )
-        if i % 4 == 3 or i == iterations - 1:
-            ranks = cut_lineage(ranks, eager=True)
-    return ranks

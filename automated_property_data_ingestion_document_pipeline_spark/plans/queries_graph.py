@@ -122,10 +122,12 @@ def q_pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     17/20, ranks in units of 1e-12), so partial-sum order cannot change
     a bit and the driver value-hashes the full iterative algorithm:
     degree computation, contribution floor-divides, damped update, all
-    8 rounds. Same two-shuffles-per-iteration plan and localCheckpoint
-    lineage hygiene as the production float lane (operators/graph.py);
-    upgrades the graph family's last rows-only algorithm to
-    oracle-backed, the q_minhash_portable pattern applied to iteration.
+    8 rounds. Same plan as the production float lane (operators/graph.py):
+    one checkpointed adjacency list (the only read of ``orders``), a
+    join-free first round, then one node-level join of adjacency and
+    ranks per round, lineage cut every fourth round. Upgrades the graph
+    family's last rows-only algorithm to oracle-backed, the
+    q_minhash_portable pattern applied to iteration.
     ``scale`` is EXPLICIT because the static oracle bakes the 1e-12
     unit into the replayed CTE; the operator validates it against the
     2^63 bound and raises typed instead of wrapping (r07 advice)."""

@@ -67,14 +67,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     5.0 -> 2.25 s steady at sf1.0, and 11.7 MB of tokenize shuffle
     drops to 0.1."""
     tok_t = ensure_token_base(spark, sf_dir)
-    return _inverted_from_tk(spark.table(tok_t))
-
-
-def _inverted_from_tk(tk_df: DataFrame) -> DataFrame:
-    """Inverted index over a (doc_id, tk array<string>) relation —
-    everything below the tokenize, shared by the registered lane and
-    the persisted-token A/B variant."""
-    t = tk_df.select("doc_id", F.explode("tk").alias("tok")).distinct()
+    t = spark.table(tok_t).select("doc_id", F.explode("tk").alias("tok")).distinct()
     return (
         t.groupBy("tok")
         .agg(
@@ -132,17 +125,10 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     §41 carve-out case that genuinely KEEPS the defensive ROUND: the
     operands are identical, the evaluation isn't. r13: token arrays
     from the persisted per-corpus table (ensure_token_base) — 4.9 ->
-    0.83 s steady at sf1.0."""
+    0.83 s steady at sf1.0 (SCALE_STUDY_sf1.json
+    ``token_adoption_ab_sf1``)."""
     tok_t = ensure_token_base(spark, sf_dir)
-    return _bm25_from_tk(spark.table(tok_t))
-
-
-def _bm25_from_tk(tk_df: DataFrame) -> DataFrame:
-    """BM25 over a (doc_id, tk array<string>) relation — the whole plan
-    below the tokenize step, split out for the r13 persisted-token A/B
-    (SCALE_STUDY_sf1.json ``token_adoption_ab_sf1``) so the comparison
-    isolated exactly the tokenize-vs-read cost."""
-    docs = tk_df.withColumn(
+    docs = spark.table(tok_t).withColumn(
         "doc_len", F.size("tk").cast("bigint")
     ).filter(F.col("doc_len") > 0)
     t = docs.select("doc_id", "doc_len", F.explode("tk").alias("tok"))

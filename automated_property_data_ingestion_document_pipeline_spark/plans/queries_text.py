@@ -1324,15 +1324,9 @@ def q_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(len²) per doc (the classic expression-blowup; 19.5 s → ~3 s at
     # sf0.1 from this select alone). r13: the array now comes from the
     # persisted per-corpus token table (ensure_token_base) — 9.4 ->
-    # 2.05 s steady at sf1.0.
-    tok_t = ensure_token_base(spark, sf_dir)
-    return _skipgram_pmi_from_toks(spark.table(tok_t).select("tk"))
-
-
-def _skipgram_pmi_from_toks(toks_df: DataFrame) -> DataFrame:
-    """Skip-gram PMI over a (tk array<string>) relation — the plan
-    below the tokenize, split out for the r13 persisted-token A/B
-    (SCALE_STUDY_sf1.json ``token_adoption_ab_sf1``)."""
+    # 2.05 s steady at sf1.0 (SCALE_STUDY_sf1.json
+    # ``token_adoption_ab_sf1``).
+    toks_df = spark.table(ensure_token_base(spark, sf_dir)).select("tk")
     tk = F.col("tk")
 
     def skip_pairs(dist: int):

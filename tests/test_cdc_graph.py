@@ -171,3 +171,28 @@ def test_pagerank_fixedpoint_overflow_bound_enforced(spark):
         for r in graph.pagerank_fixedpoint(small, "a", "b", scale=10**12).collect()
     }
     assert auto == pinned
+
+
+def test_pagerank_fixedpoint_reads_edge_input_once(spark, tmp_path, monkeypatch):
+    """The checkpointed adjacency list is the only reader of the edge
+    input: with the source file deleted right after the first lineage
+    cut, the ranks still come out, equal to those of an untouched copy.
+    A plan whose rank rounds re-scan the source fails here on the
+    missing file."""
+    import shutil
+
+    rows = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 1), (1, 3), (6, 1)]
+    doomed, kept = str(tmp_path / "doomed"), str(tmp_path / "kept")
+    for path in (doomed, kept):
+        _df(spark, "a long, b long", rows).coalesce(1).write.parquet(path)
+    want = graph.pagerank_fixedpoint(spark.read.parquet(kept), "a", "b").collect()
+    real_cut = graph.cut_lineage
+
+    def cut_then_delete(df, *args, **kwargs):
+        out = real_cut(df, *args, **kwargs)
+        shutil.rmtree(doomed, ignore_errors=True)  # only the first call finds it
+        return out
+
+    monkeypatch.setattr(graph, "cut_lineage", cut_then_delete)
+    got = graph.pagerank_fixedpoint(spark.read.parquet(doomed), "a", "b").collect()
+    assert sorted(got) == sorted(want) and len(want) == 6
