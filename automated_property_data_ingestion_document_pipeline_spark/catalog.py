@@ -85,7 +85,7 @@ def corpus_bytes(sf_dir: str) -> int:
     return _CORPUS_BYTES[sf_dir]
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view (for spark.sql paths)."""
     for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
+        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -68,13 +68,13 @@ def clean_scraped_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, " ", " "))
 
 
-def letter_filename(name_col: Column, ext: str = "pdf") -> Column:
+def letter_filename(name_col: Column) -> Column:
     """Deterministic artifact name (report_generator.py:64-65):
-    ``Engagement_Letter_{safe_name}.{ext}``. NULL name → NULL filename
+    ``Engagement_Letter_{safe_name}.pdf``. NULL name → NULL filename
     (concat propagates; format_string would print the string 'null' —
     edge-corpus audit, round 2)."""
     return F.concat(
-        F.lit("Engagement_Letter_"), safe_name(name_col), F.lit(f".{ext}")
+        F.lit("Engagement_Letter_"), safe_name(name_col), F.lit(".pdf")
     )
 
 
@@ -89,10 +89,10 @@ def to_number_safe(col: Column) -> Column:
     return col.try_cast("double")
 
 
-def split_extract_last(col: Column, sep: str = ":") -> Column:
-    """Legacy parcel text extract (crs_bot.pyc ~75-95): split on ``sep``,
+def split_extract_last(col: Column) -> Column:
+    """Legacy parcel text extract (crs_bot.pyc ~75-95): split on ``:``,
     take last piece, strip."""
-    return F.trim(F.element_at(F.split(col, sep), -1))
+    return F.trim(F.element_at(F.split(col, ":"), -1))
 
 
 def letter_text(

@@ -64,31 +64,10 @@ def _isin_filter(words: list[str]):
     return lambda t: t.isin(*words)
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang`` (double)."""
-    toks = tokens(F.lower(col))
-    hits = F.size(F.filter(toks, _isin_filter(STOPWORDS[lang])))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def lang_id_from_tokens(toks: Column) -> Column:
     """Language ID from a materialized lowercase token-array column
     (same perf contract as :func:`shingles_of` — the scorer references
     the tokens once per language)."""
-    denom = F.greatest(F.size(toks), F.lit(1))
-    best_lang, best_score = F.lit("und"), F.lit(0.0)
-    for lg in sorted(STOPWORDS):  # fixed order → deterministic ties
-        score = F.size(F.filter(toks, _isin_filter(STOPWORDS[lg]))) / denom
-        better = score > best_score
-        best_lang = F.when(better, F.lit(lg)).otherwise(best_lang)
-        best_score = F.when(better, score).otherwise(best_score)
-    return best_lang
-
-
-def lang_id(col: Column) -> Column:
-    """Heuristic language ID: argmax of per-language stopword hit-rate,
-    'und' when no list scores > 0. Ties broken by fixed language order."""
-    toks = tokens(F.lower(col))
     denom = F.greatest(F.size(toks), F.lit(1))
     best_lang, best_score = F.lit("und"), F.lit(0.0)
     for lg in sorted(STOPWORDS):  # fixed order → deterministic ties
@@ -144,10 +123,3 @@ def shingles_of(toks: Column, k: int = 3) -> Column:
     return F.when(n >= k, F.transform(idx, window_at)).otherwise(
         F.array(F.array_join(toks, " "))
     )
-
-
-def shingles(col: Column, k: int = 3) -> Column:
-    """k-token shingles straight from a text column — convenience form
-    for small expressions; df-level operators should project
-    ``tokens(col)`` and use :func:`shingles_of` (see its perf note)."""
-    return shingles_of(tokens(col), k)

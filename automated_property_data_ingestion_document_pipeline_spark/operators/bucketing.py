@@ -59,11 +59,9 @@ def write_bucketed(
     table: str,
     key: "str | list[str]",
     num_buckets: int = 8,
-    sort: bool = True,
     sort_keys: "list[str] | None" = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally bucket-sorted)
-    managed table on ``key`` (a column name or a composite key list —
+    """Persist ``df`` as a bucketed, bucket-sorted managed table on ``key`` (a column name or a composite key list —
     e.g. the LSH band index ``(band, bh)``). ``sort_keys`` (r12) lets
     the sort order be a SUPERSET of the bucket key — e.g. bucket on
     doc_id but sort (doc_id, sh), so a merge join on EITHER (doc_id)
@@ -81,12 +79,9 @@ def write_bucketed(
     loc = _table_location(spark, table)
     if loc and os.path.isdir(loc):
         shutil.rmtree(loc, ignore_errors=True)
-    w = df.write.format("parquet").mode("overwrite").bucketBy(
+    df.write.format("parquet").mode("overwrite").bucketBy(
         num_buckets, keys[0], *keys[1:]
-    )
-    if sort:
-        w = w.sortBy(sks[0], *sks[1:])
-    w.saveAsTable(table)
+    ).sortBy(sks[0], *sks[1:]).saveAsTable(table)
 
 
 def bucketed_join(
@@ -194,7 +189,6 @@ def ensure_bucketed(
     fingerprint: str,
     build: Callable[[], DataFrame],
     num_buckets: int = 8,
-    sort: bool = True,
     sort_keys: "list[str] | None" = None,
 ) -> bool:
     """Build-once guard for a persisted bucketed table — the "band the
@@ -202,7 +196,8 @@ def ensure_bucketed(
     depends on. Returns True when ``build()`` actually ran this call.
 
     The stamp compared is ``fingerprint`` plus the bucket spec (keys,
-    bucket count, sort flag), folded in HERE so no caller can change
+    bucket count, and a constant ``sorted=True`` that keeps the stamp
+    equal to older builds' so their bases are still adopted), folded in HERE so no caller can change
     the physical layout without forcing a rebuild. Three tiers:
 
     1. same session, stamp matches table properties → no-op;
@@ -229,7 +224,7 @@ def ensure_bucketed(
     when files-per-bucket is exactly 1."""
     keys = [key] if isinstance(key, str) else list(key)
     sks = list(sort_keys) if sort_keys else keys
-    stamp = f"{fingerprint}|keys={','.join(keys)}|nb={num_buckets}|sorted={sort}"
+    stamp = f"{fingerprint}|keys={','.join(keys)}|nb={num_buckets}|sorted=True"
     if sks != keys:
         stamp += f"|sortkeys={','.join(sks)}"
     if "'" in stamp:
@@ -258,10 +253,9 @@ def ensure_bucketed(
         if disk_stamp == stamp:
             schema = spark.read.parquet(loc).schema
             cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
-            sort_sql = f"SORTED BY ({', '.join(sks)}) " if sort else ""
             spark.sql(
                 f"CREATE TABLE {table} ({cols}) USING PARQUET "
-                f"CLUSTERED BY ({', '.join(keys)}) {sort_sql}"
+                f"CLUSTERED BY ({', '.join(keys)}) SORTED BY ({', '.join(sks)}) "
                 f"INTO {num_buckets} BUCKETS LOCATION '{loc}'"
             )
             spark.sql(
@@ -269,9 +263,7 @@ def ensure_bucketed(
             )
             return False
 
-    write_bucketed(
-        build(), table, key, num_buckets=num_buckets, sort=sort, sort_keys=sks
-    )
+    write_bucketed(build(), table, key, num_buckets=num_buckets, sort_keys=sks)
     spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ('{_FP_PROP}'='{stamp}')")
     # the stamp file (and the adoption tier that reads it) only exists
     # for LOCAL warehouse paths; a remote warehouse (hdfs://, s3a://)

@@ -61,12 +61,12 @@ def last_write_wins_agg(
     return picked.select("_row.*")
 
 
-def exact_text_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_text_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup by content hash: sha2-256 the text, keep the lowest id
     per hash (deterministic canonical representative). One shuffle on the
     256-bit hash — uniform key distribution, no skew at any scale."""
-    hashed = df.withColumn("text_sha256", F.sha2(F.col(text_col), 256))
-    w = Window.partitionBy("text_sha256").orderBy(F.col(id_col).asc())
+    hashed = df.withColumn("text_sha256", F.sha2(F.col("text"), 256))
+    w = Window.partitionBy("text_sha256").orderBy(F.col("doc_id").asc())
     return (
         hashed.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -74,12 +74,7 @@ def exact_text_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def paragraph_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window_tokens: int = 8,
-) -> DataFrame:
+def paragraph_dedup(df: DataFrame, window_tokens: int = 8) -> DataFrame:
     """Corpus-wide span-level dedup (the Dolma/CCNet paragraph-removal
     op): segment each document into fixed ``window_tokens``-token spans,
     drop every span whose exact text appeared earlier in the corpus
@@ -112,7 +107,7 @@ def paragraph_dedup(
     # per span — O(len²/window) per doc (the expression-blowup class,
     # PERFORMANCE.md §39).
     toked = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
+        F.col("doc_id"), F.split(F.col("text"), " ").alias("_toks")
     )
     toks = F.col("_toks")
     n_spans = F.ceil(F.size(toks) / F.lit(float(window_tokens))).cast("int")
@@ -120,17 +115,17 @@ def paragraph_dedup(
         F.sequence(F.lit(0), n_spans - F.lit(1)),
         lambda g: F.array_join(F.slice(toks, g * window_tokens + 1, window_tokens), " "),
     )
-    exploded = toked.select(F.col(id_col), F.posexplode(spans).alias("pos", "span"))
+    exploded = toked.select(F.col("doc_id"), F.posexplode(spans).alias("pos", "span"))
     first = exploded.groupBy("span").agg(
-        F.min(F.struct(id_col, "pos")).alias("_first")
+        F.min(F.struct("doc_id", "pos")).alias("_first")
     )
     return (
         first.select(
-            F.col(f"_first.{id_col}").alias(id_col),
+            F.col("_first.doc_id").alias("doc_id"),
             F.col("_first.pos").alias("pos"),
             "span",
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -146,8 +141,6 @@ def paragraph_dedup(
 
 def minhash_signature_df(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
@@ -158,19 +151,17 @@ def minhash_signature_df(
     the doc id. (A higher-order-function fold with a signature-wide
     accumulator is interpreted per element and benchmarked ~5× slower —
     same lesson as simhash64_df.)"""
-    toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+    toked = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
     hashed = toked.select(
-        F.col(id_col), F.explode(shingles_of(F.col("_toks"), shingle_k)).alias("_sh")
+        F.col("doc_id"), F.explode(shingles_of(F.col("_toks"), shingle_k)).alias("_sh")
     )
-    return hashed.groupBy(id_col).agg(
+    return hashed.groupBy("doc_id").agg(
         *[F.min(F.xxhash64("_sh", F.lit(i))).alias(f"_m{i}") for i in range(num_hashes)]
     )
 
 
 def minhash_banded_df(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
@@ -182,8 +173,8 @@ def minhash_banded_df(
     candidate self-join read it with zero Exchange instead of
     re-signing the corpus every run."""
     r = num_hashes // bands
-    sig = minhash_signature_df(df, text_col, id_col, num_hashes, shingle_k).withColumnRenamed(
-        id_col, "_id"
+    sig = minhash_signature_df(df, num_hashes=num_hashes, shingle_k=shingle_k).withColumnRenamed(
+        "doc_id", "_id"
     )
     return sig.select(
         "_id",
@@ -223,8 +214,6 @@ def candidate_pairs_from_bands(banded: DataFrame) -> DataFrame:
 
 def minhash_candidate_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
@@ -234,21 +223,19 @@ def minhash_candidate_pairs(
     ad-hoc corpora; corpus-resident lanes persist the banded relation
     and call the two halves separately)."""
     return candidate_pairs_from_bands(
-        minhash_banded_df(df, text_col, id_col, num_hashes, bands, shingle_k)
+        minhash_banded_df(df, num_hashes=num_hashes, bands=bands, shingle_k=shingle_k)
     )
 
 
 def simhash64_df(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 2,
     tokens_col: "str | None" = None,
 ) -> DataFrame:
     """63-bit SimHash (sign bit skipped): majority vote per bit over
     per-shingle xxhash64 values. Near-dups differ in few bits (Charikar
     2002; Manku et al. WWW'07 dedup-at-Google design). Returns
-    (id_col, simhash).
+    (doc_id, simhash).
 
     Formulation matters: explode shingles → codegen'd SUM aggregates →
     one shuffle on the doc id → assemble the fingerprint from the
@@ -267,12 +254,12 @@ def simhash64_df(
     # every downstream expression is shared, so both paths hash
     # identically.
     if tokens_col is None:
-        toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        toked = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
     else:
-        toked = df.select(F.col(id_col), F.col(tokens_col).alias("_toks"))
+        toked = df.select(F.col("doc_id"), F.col(tokens_col).alias("_toks"))
     hashed = toked.select(
-        F.col(id_col), F.explode(shingles_of(F.col("_toks"), shingle_k)).alias("_sh")
-    ).select(id_col, F.xxhash64("_sh").alias("_h"))
+        F.col("doc_id"), F.explode(shingles_of(F.col("_toks"), shingle_k)).alias("_sh")
+    ).select("doc_id", F.xxhash64("_sh").alias("_h"))
 
     # r13 (guide §7.2 "very large plans — planning time itself can become
     # the bottleneck"): the 21 packed aggregates + 63-term fingerprint
@@ -290,7 +277,7 @@ def simhash64_df(
         ).alias(f"_p{g}")
         for g in range(21)
     ]
-    counts = hashed.groupBy(id_col).agg(*aggs)
+    counts = hashed.groupBy("doc_id").agg(*aggs)
     terms = []
     for b in range(63):
         g, j = divmod(b, 3)
@@ -302,15 +289,10 @@ def simhash64_df(
         terms = [f"({a} | {b})" for a, b in zip(terms[::2], terms[1::2])] + (
             [terms[-1]] if len(terms) % 2 else []
         )
-    return counts.select(F.col(id_col), F.expr(terms[0]).alias("simhash"))
+    return counts.select(F.col("doc_id"), F.expr(terms[0]).alias("simhash"))
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Dedup CLUSTERS from near-dup pairs: connected components by
     min-label propagation, returning ``(id, cluster_id)`` where
     cluster_id is the smallest doc id in the component (the canonical
@@ -335,8 +317,8 @@ def connected_components(
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = 0
     edges = (
-        pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-        .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
+        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
+        .unionByName(pairs.select(F.col("id_b").alias("s"), F.col("id_a").alias("d")))
         .distinct()
     )
     # materialized by round 0, reused after (reliable checkpoint when
@@ -373,19 +355,14 @@ def connected_components(
     return labels.select("id", F.col("cc").alias("cluster_id"))
 
 
-def shingle_sets_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
+def shingle_sets_df(df: DataFrame, shingle_k: int = 3) -> DataFrame:
     """Per-doc distinct shingle SETS ``(_id, _set)`` — the relation the
     exact-Jaccard verify joins against. Split out of
     :func:`ngram_jaccard_pairs` (r12) so corpus-resident lanes can
     persist it bucketed on ``_id`` and verify candidate pairs with
     zero corpus-side Exchange."""
     return df.select(
-        F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_toks")
     ).select(
         "_id", F.array_distinct(shingles_of(F.col("_toks"), shingle_k)).alias("_set")
     )
@@ -394,8 +371,6 @@ def shingle_sets_df(
 def ngram_jaccard_pairs(
     df: DataFrame,
     candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 3,
     threshold: float = 0.7,
     sets_df: "DataFrame | None" = None,
@@ -420,7 +395,7 @@ def ngram_jaccard_pairs(
     sorts. Hash-vs-merge is decided by ROW WIDTH: the portable lane's
     (doc_id, 32-char sh) rows hash-build safely, these don't."""
     if sets_df is None:
-        sets_df = shingle_sets_df(df, text_col, id_col, shingle_k)
+        sets_df = shingle_sets_df(df, shingle_k=shingle_k)
     a = sets_df.hint("merge").alias("a")
     b = sets_df.hint("merge").alias("b")
     joined = (

@@ -74,14 +74,11 @@ def grid_radius_join(
     big_xy: tuple[str, str],
     small_xy: tuple[str, str],
     radius: int,
-    broadcast_small: bool = True,
 ) -> DataFrame:
     """All (big, small) pairs within ``radius`` (planar integer units).
 
-    The small side is exploded to its 3x3 neighborhood and (by default)
-    broadcast — the shape of "parcels x county recorder offices". Set
-    ``broadcast_small=False`` for two large sides: the join becomes a
-    shuffled hash join on ``cell_id`` — still never a cartesian.
+    The small side is exploded to its 3x3 neighborhood and broadcast —
+    the shape of "parcels x county recorder offices". Never a cartesian.
 
     Output: all columns of both sides plus exact ``dist2`` (BIGINT
     squared distance). Column names must not collide across sides.
@@ -91,9 +88,7 @@ def grid_radius_join(
     # Rejected (r14): fanning a 1-split probe out to a task wave took
     # sf1.0 from 8.2 to 1.0 s but sf0.1 from 0.88 to 1.06 s (interleaved).
     probe = big.withColumn("cell_id", cell_of(F.col(bx), F.col(by), radius))
-    build = _with_neighbor_cells(small, sx, sy, radius)
-    if broadcast_small:
-        build = F.broadcast(build)
+    build = F.broadcast(_with_neighbor_cells(small, sx, sy, radius))
     dx = F.col(bx) - F.col(sx)
     dy = F.col(by) - F.col(sy)
     return (

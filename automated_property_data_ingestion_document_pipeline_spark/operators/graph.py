@@ -176,7 +176,6 @@ def pagerank(
     src: str,
     dst: str,
     iterations: int = 8,
-    damping: float = 0.85,
 ) -> DataFrame:
     """PageRank over the undirected graph (each canonical edge walks
     both ways, so no dangling mass). Returns (node, rank) with
@@ -185,15 +184,15 @@ def pagerank(
     Plan: :func:`_power_iterate` over the checkpointed
     :func:`_adjacency` list; :func:`cut_lineage` makes the cuts reliable
     checkpoints when the session has a checkpoint dir. Iteration count
-    is a fixed budget (power iteration converges geometrically at
-    `damping` rate)."""
+    is a fixed budget (power iteration converges geometrically at the
+    damping rate, 0.85)."""
     return _power_iterate(
         _adjacency(edges, src, dst),
         iterations,
         "rank",
         F.lit(1.0),
         F.col("rank") / F.col("odeg"),
-        F.lit(1.0 - damping) + F.lit(damping) * F.col("csum"),
+        F.lit(1.0 - 0.85) + F.lit(0.85) * F.col("csum"),
     )
 
 

@@ -72,12 +72,7 @@ def dhash63(grid: np.ndarray) -> int:
     return h
 
 
-def hamming_pairs(
-    hashes: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "dhash",
-    max_hamming: int = HAMMING_MAX,
-) -> DataFrame:
+def hamming_pairs(hashes: DataFrame, max_hamming: int = HAMMING_MAX) -> DataFrame:
     """Banded Hamming near-dup join over a (id, hash) relation:
     explode each hash into N_BANDS 16-bit slices, self-join on
     (band_idx, band_val) for candidates, verify with
@@ -86,15 +81,15 @@ def hamming_pairs(
     slices (e.g. the all-zero slice of flat images) the same way the
     MinHash lanes handle hot shingle buckets."""
     bands = hashes.select(
-        F.col(id_col).alias("_id"),
-        F.col(hash_col).alias("_h"),
+        F.col("doc_id").alias("_id"),
+        F.col("dhash").alias("_h"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(k).alias("band_idx"),
                         (
-                            F.shiftrightunsigned(F.col(hash_col), 16 * k)
+                            F.shiftrightunsigned(F.col("dhash"), 16 * k)
                             .bitwiseAND(F.lit(65535))
                         ).alias("band_val"),
                     )

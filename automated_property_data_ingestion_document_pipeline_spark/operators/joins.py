@@ -14,16 +14,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
+def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
     """Dimension enrichment as an explicit broadcast hash join — the
     Spark reading of ``COUNTY_OPTIONS[stateCode]`` (App.js:283)."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
-def enrich_left(requests: DataFrame, enriched: DataFrame, on, cols: list[str]) -> DataFrame:
-    """Parcel-enrichment shape (crs_ui_bot.py:234-250; app.py:55-58):
-    left join; misses stay null (the reference's None contract)."""
-    return requests.join(enriched.select(*cols), on, "left")
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def asof_join(

@@ -70,7 +70,6 @@ def compact_write(
     df: DataFrame,
     path: str,
     target_files: int = 4,
-    max_records_per_file: int = 1_000_000,
 ) -> None:
     """Compaction: coalesce the dataset into ``target_files`` parquet
     files (round-robin repartition — balanced regardless of input
@@ -78,6 +77,6 @@ def compact_write(
     (
         df.repartition(target_files)
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", str(max_records_per_file))
+        .option("maxRecordsPerFile", "1000000")
         .parquet(path)
     )

@@ -115,7 +115,6 @@ def global_prefix_sum(
     order_cols: list[Column],
     sum_col: str,
     out_col: str = "prefix_sum",
-    num_partitions: "int | None" = None,
 ) -> DataFrame:
     """Append the INCLUSIVE running sum of ``sum_col`` in ``order_cols``
     order — the scalable twin of ``SUM(x) OVER (ORDER BY …)``, built
@@ -125,7 +124,7 @@ def global_prefix_sum(
     partition. ``order_cols`` must be a total order for a deterministic
     result (exclusive prefix = inclusive − current value)."""
     parts = (
-        df.repartitionByRange(_range_width(df, num_partitions), *order_cols)
+        df.repartitionByRange(_range_width(df, None), *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
     )

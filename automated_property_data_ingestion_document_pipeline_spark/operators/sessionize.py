@@ -35,13 +35,7 @@ def _ts_to_micros(series):
     raise ValueError(f"unsupported datetime64 resolution: {unit!r}")
 
 
-def sessionize(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    id_col: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Assign ``session_id`` (1-based per key): a new session starts when
     the gap to the previous event reaches ``gap_minutes``.
 
@@ -54,20 +48,20 @@ def sessionize(
     NULL-``ts`` rows are quarantined (dropped): they have no timeline
     position — matching the streaming twin, where an event without an
     event-time never enters a session window."""
-    df = df.filter(F.col(ts).isNotNull())
-    order = [F.col(ts).asc(), F.col(id_col).asc()]
-    w = Window.partitionBy(key).orderBy(*order)
+    df = df.filter(F.col("ts").isNotNull())
+    order = [F.col("ts").asc(), F.col("event_id").asc()]
+    w = Window.partitionBy("user_id").orderBy(*order)
     gap_sec = gap_minutes * 60
     # .cast("timestamp") first: TIMESTAMP_NTZ columns (plain micros
     # parquet) can't cast straight to double; LTZ→LTZ is a no-op
-    sec = F.col(ts).cast("timestamp").cast("double")
-    prev_sec = F.lag(ts).over(w).cast("timestamp").cast("double")
+    sec = F.col("ts").cast("timestamp").cast("double")
+    prev_sec = F.lag("ts").over(w).cast("timestamp").cast("double")
     is_new = (
-        F.when(F.lag(ts).over(w).isNull(), 1)
+        F.when(F.lag("ts").over(w).isNull(), 1)
         .when(sec - prev_sec >= gap_sec, 1)
         .otherwise(0)
     )
-    cum = Window.partitionBy(key).orderBy(*order).rowsBetween(
+    cum = Window.partitionBy("user_id").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return df.withColumn("_new", is_new).withColumn(
@@ -75,28 +69,19 @@ def sessionize(
     ).drop("_new")
 
 
-def session_summary(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    id_col: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def session_summary(df: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-session rollup: event count + bounds (the `q_sessionize`
     registration shape)."""
-    s = sessionize(df, key, ts, id_col, gap_minutes)
-    return s.groupBy(key, "session_id").agg(
+    s = sessionize(df, gap_minutes=gap_minutes)
+    return s.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
-        F.min(ts).alias("session_start"),
-        F.max(ts).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
     )
 
 
 def session_summary_two_phase(
     df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    id_col: str = "event_id",
     gap_minutes: int = 30,
     chunk_hours: int = 24,
 ) -> DataFrame:
@@ -127,39 +112,39 @@ def session_summary_two_phase(
     — orders of magnitude below event count for a hot key. Cost vs the
     single pass: one extra (cheap) shuffle — the 100 TB insurance
     premium."""
-    df = df.filter(F.col(ts).isNotNull())
+    df = df.filter(F.col("ts").isNotNull())
     gap_sec = gap_minutes * 60
-    sec = F.col(ts).cast("timestamp").cast("double")
+    sec = F.col("ts").cast("timestamp").cast("double")
     chunk = F.floor(sec / (chunk_hours * 3600))
 
     # phase 1: sessionize within (key, chunk); same order + same gap
     # predicate as the single-pass form
-    order = [F.col(ts).asc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy(key, "_chunk").orderBy(*order)
-    prev_sec = F.lag(ts).over(w1).cast("timestamp").cast("double")
+    order = [F.col("ts").asc(), F.col("event_id").asc()]
+    w1 = Window.partitionBy("user_id", "_chunk").orderBy(*order)
+    prev_sec = F.lag("ts").over(w1).cast("timestamp").cast("double")
     is_new = (
-        F.when(F.lag(ts).over(w1).isNull(), 1)
+        F.when(F.lag("ts").over(w1).isNull(), 1)
         .when(sec - prev_sec >= gap_sec, 1)
         .otherwise(0)
     )
-    cum1 = Window.partitionBy(key, "_chunk").orderBy(*order).rowsBetween(
+    cum1 = Window.partitionBy("user_id", "_chunk").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     local = (
         df.withColumn("_chunk", chunk)
         .withColumn("_ls", F.sum(is_new).over(cum1))
-        .groupBy(key, "_chunk", "_ls")
+        .groupBy("user_id", "_chunk", "_ls")
         .agg(
             F.count("*").alias("n_events"),
-            F.min(ts).alias("_start"),
-            F.max(ts).alias("_end"),
+            F.min("ts").alias("_start"),
+            F.max("ts").alias("_end"),
         )
     )
 
     # phase 2: same gap logic over local sessions (per key, ordered by
     # start — starts are distinct per key: same-ts events share a chunk
     # and thus a local session). Gap = this start − previous END.
-    w2 = Window.partitionBy(key).orderBy(F.col("_start").asc())
+    w2 = Window.partitionBy("user_id").orderBy(F.col("_start").asc())
     prev_end = F.lag("_end").over(w2).cast("timestamp").cast("double")
     start_sec = F.col("_start").cast("timestamp").cast("double")
     is_new2 = (
@@ -167,12 +152,12 @@ def session_summary_two_phase(
         .when(start_sec - prev_end >= gap_sec, 1)
         .otherwise(0)
     )
-    cum2 = Window.partitionBy(key).orderBy(F.col("_start").asc()).rowsBetween(
+    cum2 = Window.partitionBy("user_id").orderBy(F.col("_start").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return (
         local.withColumn("session_id", F.sum(is_new2).over(cum2))
-        .groupBy(key, "session_id")
+        .groupBy("user_id", "session_id")
         .agg(
             F.sum("n_events").alias("n_events"),
             F.min("_start").alias("session_start"),
@@ -183,9 +168,6 @@ def session_summary_two_phase(
 
 def sessionize_capped(
     df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    id_col: str = "event_id",
     gap_minutes: int = 30,
     max_span_minutes: int = 120,
 ) -> DataFrame:
@@ -208,7 +190,7 @@ def sessionize_capped(
     oracle replays the identical recurrence as a recursive CTE, so the
     driver checks the sequential semantics value-for-value.
 
-    Returns one row per event: (key, event_id, ts, session_n) with
+    Returns one row per event: (user_id, event_id, ts, session_n) with
     sessions numbered 1..k per key in time order; NULL-ts rows are
     quarantined as in :func:`sessionize`."""
     import numpy as np
@@ -220,7 +202,7 @@ def sessionize_capped(
     gap_us = gap_minutes * 60 * 1_000_000
     span_us = max_span_minutes * 60 * 1_000_000
 
-    out_schema = f"{key} bigint, {id_col} bigint, {ts} timestamp, session_n int"
+    out_schema = "user_id bigint, event_id bigint, ts timestamp, session_n int"
 
     # One Arrow stream per PARTITION, not one pandas frame per KEY:
     # applyInPandas was measured 5× slower here purely on per-group
@@ -245,8 +227,8 @@ def sessionize_capped(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            uids = pdf[key].to_numpy()
-            t = _ts_to_micros(pdf[ts])  # resolution-aware exact micros
+            uids = pdf["user_id"].to_numpy()
+            t = _ts_to_micros(pdf["ts"])  # resolution-aware exact micros
             n = len(uids)
             new_user = np.empty(n, dtype=bool)
             new_user[0] = cur_user is None or uids[0] != cur_user
@@ -296,13 +278,13 @@ def sessionize_capped(
             prev = int(t[-1])
             cur = int(sess[-1])
             anchor = int(track_anchor)
-            out = pdf[[key, id_col, ts]].copy()
+            out = pdf[["user_id", "event_id", "ts"]].copy()
             out["session_n"] = sess
             yield out
 
     return (
-        df.filter(F.col(ts).isNotNull())
-        .repartition(key)
-        .sortWithinPartitions(key, ts, id_col)
+        df.filter(F.col("ts").isNotNull())
+        .repartition("user_id")
+        .sortWithinPartitions("user_id", "ts", "event_id")
         .mapInPandas(assign, out_schema)
     )

@@ -64,8 +64,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast queries × scan corpus, window
     rank per query. Ties broken by corpus id for determinism."""
@@ -73,19 +71,19 @@ def brute_force_topk(
     # the query x corpus blowup costs two extra O(d) folds per pair for
     # the identical double (norm is a pure function of the vector).
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
+        norm(F.col("embedding")).alias("_qn"),
     )
-    c_n = corpus.withColumn("_cn", norm(F.col(vec_col)))
+    c_n = corpus.withColumn("_cn", norm(F.col("embedding")))
     scored = c_n.alias("c").join(
-        F.broadcast(q), F.col("query_id") != F.col(f"c.{id_col}")
+        F.broadcast(q), F.col("query_id") != F.col("c.vec_id")
     ).select(
         "query_id",
-        F.col(f"c.{id_col}").alias("neighbor_id"),
+        F.col("c.vec_id").alias("neighbor_id"),
         F.round(
             cosine_with_norms(
-                F.col("_qvec"), F.col(f"c.{vec_col}"), F.col("_qn"), F.col("c._cn")
+                F.col("_qvec"), F.col("c.embedding"), F.col("_qn"), F.col("c._cn")
             ),
             6,
         ).alias("cos_sim"),
@@ -100,7 +98,7 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec: Column, num_planes: int = 8, dim: int = 64) -> Column:
+def hyperplane_signature(vec: Column, num_planes: int = 8) -> Column:
     """Random-hyperplane LSH bit signature (int): bit p = sign of
     <vec, plane_p>. Row-local higher-order-function arithmetic."""
     def plane_fn(p: int):
@@ -112,7 +110,7 @@ def hyperplane_signature(vec: Column, num_planes: int = 8, dim: int = 64) -> Col
         proj = F.aggregate(
             F.zip_with(
                 vec,
-                F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), plane_fn(p)),
+                F.transform(F.sequence(F.lit(0), F.lit(63)), plane_fn(p)),
                 lambda x, w: x.cast("double") * w,
             ),
             F.lit(0.0),
@@ -122,97 +120,33 @@ def hyperplane_signature(vec: Column, num_planes: int = 8, dim: int = 64) -> Col
     return sig
 
 
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: compare only within matching hyperplane bucket.
-    Same output schema as brute_force_topk; recall < 1 by design.
-
-    .. deprecated:: round 3
-        Single-table bucketing has a recall cliff (one 8-bit table ≈ 0.2
-        recall@5 on the near-orthogonal corpus — PERFORMANCE.md §7);
-        prefer :func:`lsh_topk_multi` (multi-table OR-amplification,
-        recall@5 0.83 at probe 0.54). Kept for the bucketing-baseline
-        comparison in ``q_lsh_recall``."""
-    sig = lambda df: df.withColumn("_sig", hyperplane_signature(F.col(vec_col), num_planes, dim))
-    q = sig(queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        norm(F.col(vec_col)).alias("_qn"),
-        "_sig",
-    )
-    c = sig(corpus).withColumn("_cn", norm(F.col(vec_col)))
-    scored = c.alias("c").join(
-        F.broadcast(q),
-        (F.col("c._sig") == q["_sig"]) & (F.col("query_id") != F.col(f"c.{id_col}")),
-    ).select(
-        "query_id",
-        F.col(f"c.{id_col}").alias("neighbor_id"),
-        F.round(
-            cosine_with_norms(
-                F.col("_qvec"), F.col(f"c.{vec_col}"), F.col("_qn"), F.col("c._cn")
-            ),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def hyperplane_signatures(
-    vec: Column,
-    num_tables: int = 12,
-    num_planes: int = 4,
-    dim: int = 64,
-    seed: int = 7,
-) -> Column:
+def hyperplane_signatures(vec: Column) -> Column:
     """Per-table random-hyperplane signatures as ``array<bigint>`` of
-    length ``num_tables`` (table t's signature = ``num_planes`` sign
-    bits of Gaussian projections).
+    length 12 (table t's signature = 4 sign bits of Gaussian
+    projections of a 64-dim vector).
 
     One Arrow-batched numpy matmul per batch (V @ planes, the measured
     6× winner over per-plane HOF folds, PERFORMANCE.md §4) — row-local,
     map-only, no shuffle; the plane matrix is a deterministic
-    ``RandomState(seed)`` draw closed over by the UDF (broadcast with
+    ``RandomState(7)`` draw closed over by the UDF (broadcast with
     the task, ~2 KB)."""
     from pyspark.sql.functions import pandas_udf
 
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((dim, num_tables * num_planes))
-    weights = 1 << np.arange(num_planes, dtype=np.int64)
+    rng = np.random.RandomState(7)
+    planes = rng.standard_normal((64, 12 * 4))
+    weights = 1 << np.arange(4, dtype=np.int64)
 
     @pandas_udf("array<bigint>")
     def _sigs(vecs: pd.Series) -> pd.Series:
         V = np.vstack(vecs.to_numpy()).astype(np.float64)
         bits = (V @ planes) >= 0.0
-        bits = bits.reshape(len(V), num_tables, num_planes)
+        bits = bits.reshape(len(V), 12, 4)
         return pd.Series(list(bits @ weights))
 
     return _sigs(vec)
 
 
-def lsh_candidate_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    num_tables: int = 12,
-    num_planes: int = 4,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-) -> DataFrame:
+def lsh_candidate_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Candidate (query, neighbor) pairs from L independent signature
     tables, exact-cosine-scored and deduped.
 
@@ -225,20 +159,20 @@ def lsh_candidate_pairs(
     for the one-table recall cliff (round-1 verdict): recall =
     1-(1-p^b)^L instead of p^b."""
     sig = lambda df: df.withColumn(  # noqa: E731
-        "_sigs", hyperplane_signatures(F.col(vec_col), num_tables, num_planes, dim, seed)
+        "_sigs", hyperplane_signatures(F.col("embedding"))
     )
     # norms computed BEFORE the L-way table fan-out AND the candidate
     # join (once per vector, not per table row or per candidate —
     # finding §57's hoist-before-the-blowup rule)
-    q = sig(queries).withColumn("_qn", norm(F.col(vec_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
+    q = sig(queries).withColumn("_qn", norm(F.col("embedding"))).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
         "_qn",
         F.posexplode("_sigs").alias("_qt", "_qsig"),
     )
-    c = sig(corpus).withColumn("_cn", norm(F.col(vec_col))).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
+    c = sig(corpus).withColumn("_cn", norm(F.col("embedding"))).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
         "_cn",
         F.posexplode("_sigs").alias("_ct", "_csig"),
     )
@@ -261,39 +195,28 @@ def lsh_candidate_pairs(
     return cand.groupBy("query_id", "neighbor_id").agg(F.max("cos_sim").alias("cos_sim"))
 
 
-def lsh_topk_multi(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_tables: int = 12,
-    num_planes: int = 4,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-) -> DataFrame:
+def lsh_topk_multi(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Approximate top-k over the multi-table LSH candidates; same output
-    schema as brute_force_topk. Tuning: more tables → recall; more
-    planes → fewer probes per table. On clustered real-world embeddings
-    raise num_planes with corpus size (bucket occupancy ~ n/2^b); the
-    near-orthogonal test corpus needs few planes + many tables."""
-    cand = lsh_candidate_pairs(
-        corpus, queries, num_tables, num_planes, dim, vec_col, id_col, seed
-    )
+    schema as brute_force_topk. More tables raise recall; more planes
+    mean fewer probes per table. The near-orthogonal test corpus needs
+    few planes and many tables (12 × 4 here); clustered real-world
+    embeddings would need planes that grow with corpus size (bucket
+    occupancy ~ n/2^b)."""
+    cand = lsh_candidate_pairs(corpus, queries)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
 
 
-def _kmeans_codebook(X: np.ndarray, k: int, iters: int = 10, seed: int = 11) -> np.ndarray:
+def _kmeans_codebook(X: np.ndarray, k: int, seed: int = 11) -> np.ndarray:
     """Deterministic driver-side Lloyd k-means over a bounded sample
     (≤ 4096 × dim floats — microseconds of numpy): seeded choice init,
     fixed iteration count, empty cells keep their previous centroid."""
     rng = np.random.RandomState(seed)
     k = min(k, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(10):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
         assign = d.argmin(axis=1)
         for j in range(k):
@@ -308,8 +231,6 @@ def ivf_candidate_pairs(
     queries: DataFrame,
     num_cells: int = 8,
     nprobe: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF candidate generation: coarse-quantize to ``num_cells``
     centroid cells, pair each query with the corpus rows in its
@@ -336,12 +257,12 @@ def ivf_candidate_pairs(
     from pyspark.sql.functions import pandas_udf
 
     sample_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)).asc(), F.col(id_col).asc())
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(997)).asc(), F.col("vec_id").asc())
         .limit(4096)
         .collect()
     )
-    X = np.array([[float(x) for x in r[vec_col]] for r in sample_rows])
+    X = np.array([[float(x) for x in r["embedding"]] for r in sample_rows])
     cents = _kmeans_codebook(X, num_cells)
     cents_n = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
 
@@ -360,25 +281,25 @@ def ivf_candidate_pairs(
         return pd.Series(list(top))
 
     c_cells = corpus.withColumn(
-        "_cell", F.element_at(cells_of(F.col(vec_col)), 1)  # corpus: nearest cell only
-    ).withColumn("_nn", norm(F.col(vec_col)))
-    q = queries.withColumn("_cells", cells_of(F.col(vec_col))).withColumn(
-        "_qn", norm(F.col(vec_col))
+        "_cell", F.element_at(cells_of(F.col("embedding")), 1)  # corpus: nearest cell only
+    ).withColumn("_nn", norm(F.col("embedding")))
+    q = queries.withColumn("_cells", cells_of(F.col("embedding"))).withColumn(
+        "_qn", norm(F.col("embedding"))
     ).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
         "_qn",
         F.explode("_cells").alias("_cell"),  # query fan-out: nprobe rows
     )
     return c_cells.alias("c").join(
         F.broadcast(q),
-        (F.col("c._cell") == q["_cell"]) & (F.col("query_id") != F.col(f"c.{id_col}")),
+        (F.col("c._cell") == q["_cell"]) & (F.col("query_id") != F.col("c.vec_id")),
     ).select(
         "query_id",
-        F.col(f"c.{id_col}").alias("neighbor_id"),
+        F.col("c.vec_id").alias("neighbor_id"),
         "_qvec",
         "_qn",
-        F.col(f"c.{vec_col}").alias("_nvec"),
+        F.col("c.embedding").alias("_nvec"),
         F.col("c._nn").alias("_nn"),
     )
 
@@ -389,13 +310,11 @@ def ivf_topk(
     k: int = 5,
     num_cells: int = 8,
     nprobe: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-style ANN top-k: exact cosine over the candidates from
     :func:`ivf_candidate_pairs` (codebook/probing rationale and the
     recall-vs-probed-mass knobs documented there)."""
-    cand = ivf_candidate_pairs(corpus, queries, num_cells, nprobe, vec_col, id_col)
+    cand = ivf_candidate_pairs(corpus, queries, num_cells, nprobe)
     scored = cand.select(
         "query_id",
         "neighbor_id",
@@ -420,24 +339,22 @@ def cosine_pairs(
     df: DataFrame,
     threshold: float = 0.9,
     max_id: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs above threshold (id_a < id_b).
     ``max_id`` bounds the quadratic blowup for the oracle-checked small
     variant; the scale path is lsh_topk_multi / bucketed join."""
-    base = df if max_id is None else df.filter(F.col(id_col) < max_id)
+    base = df if max_id is None else df.filter(F.col("vec_id") < max_id)
     # norms hoisted to the linear-sized sides (identical doubles, two
     # fewer O(d) folds per pair — see cosine_with_norms)
     a = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        norm(F.col(vec_col)).alias("_na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("_va"),
+        norm(F.col("embedding")).alias("_na"),
     )
     b = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        norm(F.col(vec_col)).alias("_nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("_vb"),
+        norm(F.col("embedding")).alias("_nb"),
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -455,9 +372,7 @@ def cosine_pairs(
     )
 
 
-def _pq_codebooks(
-    X: np.ndarray, num_subspaces: int, ks: int, seed: int = 13
-) -> np.ndarray:
+def _pq_codebooks(X: np.ndarray, num_subspaces: int, ks: int) -> np.ndarray:
     """Per-subspace k-means codebooks for product quantization, trained
     on the same bounded deterministic sample as the IVF coarse
     quantizer. Returns ``(num_subspaces, ks, sub_dim)``; subspace m
@@ -468,7 +383,7 @@ def _pq_codebooks(
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     return np.stack(
         [
-            _kmeans_codebook(Xn[:, m * sub : (m + 1) * sub], ks, seed=seed + m)
+            _kmeans_codebook(Xn[:, m * sub : (m + 1) * sub], ks, seed=13 + m)
             for m in range(num_subspaces)
         ]
     )
@@ -479,10 +394,6 @@ def pq_scored_candidates(
     queries: DataFrame,
     num_subspaces: int = 8,
     ks: int = 16,
-    per_batch_keep: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 13,
 ) -> DataFrame:
     """Product-quantization ANN scan (Jégou et al., PQ for nearest
     neighbor search): corpus vectors are compressed to ``num_subspaces``
@@ -503,25 +414,25 @@ def pq_scored_candidates(
     - one ``mapInPandas`` pass over the corpus encodes each batch to
       codes and scores ALL queries against the batch in two numpy
       matmul/gather steps — approx_sim(q, v) = Σ_m LUT[q, m, code_m(v)]
-      — then emits only each query's ``per_batch_keep`` best rows
+      — then emits only each query's 64 best rows
       (partition-local pre-pruning: the map-side-combine analog, so the
       shuffle carries Q × keep rows per batch, never Q × |batch|).
 
     Output: ``(query_id, neighbor_id, approx_sim)`` — feed to
     :func:`pq_topk` for exact rerank."""
-    q_rows = _bounded_query_rows(queries, id_col, vec_col)
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.array([[float(x) for x in r[vec_col]] for r in q_rows])
+    q_rows = _bounded_query_rows(queries, "vec_id", "embedding")
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+    Q = np.array([[float(x) for x in r["embedding"]] for r in q_rows])
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
 
     sample_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)).asc(), F.col(id_col).asc())
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(997)).asc(), F.col("vec_id").asc())
         .limit(4096)
         .collect()
     )
-    X = np.array([[float(x) for x in r[vec_col]] for r in sample_rows])
-    books = _pq_codebooks(X, num_subspaces, ks, seed)  # (M, ks, sub)
+    X = np.array([[float(x) for x in r["embedding"]] for r in sample_rows])
+    books = _pq_codebooks(X, num_subspaces, ks)  # (M, ks, sub)
     sub = X.shape[1] // num_subspaces
     # ADC lookup table: LUT[q, m, j] = <q_m, centroid_{m,j}>
     lut = np.einsum("qmd,mjd->qmj", Qn.reshape(len(Qn), num_subspaces, sub), books)
@@ -530,8 +441,8 @@ def pq_scored_candidates(
 
     def score_partition(batches):
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            V = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
             Vs = Vn.reshape(len(Vn), num_subspaces, sub)
             # encode: nearest centroid per subspace on the NORMALIZED
@@ -549,7 +460,7 @@ def pq_scored_candidates(
             scores = np.zeros((len(q_ids), len(ids)))
             for m in range(num_subspaces):
                 scores += lut[:, m, codes[:, m]]
-            keep = min(per_batch_keep, len(ids))
+            keep = min(64, len(ids))
             # per-query partial top-keep; ties broken by neighbor id via
             # stable argsort on (-score, id-order already stable)
             top = np.argsort(-scores, axis=1, kind="stable")[:, :keep]
@@ -561,7 +472,7 @@ def pq_scored_candidates(
                 {"query_id": qi[m_self], "neighbor_id": ni[m_self], "approx_sim": sc[m_self]}
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(score_partition, out_schema)
+    return corpus.select("vec_id", "embedding").mapInPandas(score_partition, out_schema)
 
 
 def pq_topk(
@@ -571,18 +482,13 @@ def pq_topk(
     num_subspaces: int = 8,
     ks: int = 16,
     rerank: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 13,
 ) -> DataFrame:
     """PQ ANN top-k with exact rerank: take each query's ``rerank * k``
     best compressed-domain candidates, fetch ONLY those full vectors
     (semi-join back to the corpus — the fraction of raw vectors read is
     ``rerank*k/|corpus|``, the number q_pq_recall reports), score exact
     cosine, keep top-k. Same output schema as brute_force_topk."""
-    cand = pq_scored_candidates(
-        corpus, queries, num_subspaces, ks, vec_col=vec_col, id_col=id_col, seed=seed
-    )
+    cand = pq_scored_candidates(corpus, queries, num_subspaces, ks)
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -591,10 +497,10 @@ def pq_topk(
         .filter(F.col("_rn") <= rerank * k)
         .drop("_rn")
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"))
     rescored = (
         short.join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")),
+            corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")),
             "neighbor_id",
         )
         .join(F.broadcast(q), "query_id")
@@ -618,14 +524,6 @@ def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    num_cells: int = 32,
-    nprobe: int = 14,
-    num_subspaces: int = 32,
-    ks: int = 16,
-    rerank: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 13,
 ) -> DataFrame:
     """IVF-PQ: the canonical billion-scale ANN composition (coarse
     cells bound WHICH rows are scored, PQ codes bound HOW MUCH of each
@@ -644,32 +542,34 @@ def ivfpq_topk(
     argued at :func:`ivf_candidate_pairs`)."""
     from pyspark.sql.functions import pandas_udf
 
+    num_cells, nprobe, num_subspaces, ks, rerank = 32, 14, 32, 16, 4
+
     sample_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)).asc(), F.col(id_col).asc())
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(997)).asc(), F.col("vec_id").asc())
         .limit(4096)
         .collect()
     )
-    X = np.array([[float(x) for x in r[vec_col]] for r in sample_rows])
+    X = np.array([[float(x) for x in r["embedding"]] for r in sample_rows])
     cents = _kmeans_codebook(X, num_cells)
     cents_n = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    books = _pq_codebooks(X, num_subspaces, ks, seed)
+    books = _pq_codebooks(X, num_subspaces, ks)
     dim = X.shape[1]
     sub = dim // num_subspaces
     n_probe = min(nprobe, len(cents_n))
 
-    q_rows = _bounded_query_rows(queries, id_col, vec_col)
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.array([[float(x) for x in r[vec_col]] for r in q_rows])
+    q_rows = _bounded_query_rows(queries, "vec_id", "embedding")
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+    Q = np.array([[float(x) for x in r["embedding"]] for r in q_rows])
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     lut = np.einsum("qmd,mjd->qmj", Qn.reshape(len(Qn), num_subspaces, sub), books)
     q_pos = {int(qid): i for i, qid in enumerate(q_ids)}
 
-    enc_schema = f"{id_col} bigint, _cell int, _codes array<int>"
+    enc_schema = "vec_id bigint, _cell int, _codes array<int>"
 
     def encode(batches):
         for pdf in batches:
-            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            V = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
             cell = (Vn @ cents_n.T).argmax(axis=1).astype("int32")
             Vs = Vn.reshape(len(Vn), num_subspaces, sub)
@@ -684,10 +584,10 @@ def ivfpq_topk(
                 axis=1,
             )
             yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "_cell": cell, "_codes": list(codes)}
+                {"vec_id": pdf["vec_id"].to_numpy(), "_cell": cell, "_codes": list(codes)}
             )
 
-    encoded = corpus.select(id_col, vec_col).mapInPandas(encode, enc_schema)
+    encoded = corpus.select("vec_id", "embedding").mapInPandas(encode, enc_schema)
 
     @pandas_udf("array<int>")
     def query_cells(vecs: pd.Series) -> pd.Series:
@@ -697,8 +597,8 @@ def ivfpq_topk(
         return pd.Series(list(top))
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(query_cells(F.col(vec_col))).alias("_cell"),
+        F.col("vec_id").alias("query_id"),
+        F.explode(query_cells(F.col("embedding"))).alias("_cell"),
     )
 
     @pandas_udf("double")
@@ -712,10 +612,10 @@ def ivfpq_topk(
 
     cand = encoded.join(
         F.broadcast(q),
-        (encoded["_cell"] == q["_cell"]) & (F.col("query_id") != encoded[id_col]),
+        (encoded["_cell"] == q["_cell"]) & (F.col("query_id") != encoded["vec_id"]),
     ).select(
         "query_id",
-        encoded[id_col].alias("neighbor_id"),
+        encoded["vec_id"].alias("neighbor_id"),
         adc(F.col("query_id"), F.col("_codes")).alias("approx_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -724,10 +624,10 @@ def ivfpq_topk(
     short = cand.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= rerank * k
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"))
     rescored = (
         short.join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")),
+            corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")),
             "neighbor_id",
         )
         .join(F.broadcast(qv), "query_id")
@@ -750,8 +650,6 @@ def ivfpq_topk(
 def centroid_assign(
     df: DataFrame,
     num_cells: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     out_col: str = "_cell",
 ) -> DataFrame:
     """Assign every vector to its nearest of ``num_cells`` k-means
@@ -766,12 +664,12 @@ def centroid_assign(
     from pyspark.sql.functions import pandas_udf
 
     sample_rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)).asc(), F.col(id_col).asc())
+        df.select("vec_id", "embedding")
+        .orderBy(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(997)).asc(), F.col("vec_id").asc())
         .limit(4096)
         .collect()
     )
-    X = np.array([[float(x) for x in r[vec_col]] for r in sample_rows])
+    X = np.array([[float(x) for x in r["embedding"]] for r in sample_rows])
     cents = _kmeans_codebook(X, num_cells)
     cents_n = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
 
@@ -781,7 +679,7 @@ def centroid_assign(
         Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
         return pd.Series((Vn @ cents_n.T).argmax(axis=1).astype("int32"))
 
-    return df.withColumn(out_col, cell_of(F.col(vec_col)))
+    return df.withColumn(out_col, cell_of(F.col("embedding")))
 
 
 #: Auto-recluster trigger: when the MEAN upstream cluster size exceeds
@@ -819,8 +717,6 @@ def semantic_dedup(
     df: DataFrame,
     cluster_col: str = "label",
     threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     recluster_cells: "int | str | None" = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: drop every vector that has
@@ -875,9 +771,7 @@ def semantic_dedup(
                 recluster_cells = None
     LAST_SEMDEDUP_CELLS = recluster_cells if isinstance(recluster_cells, int) else None
     if recluster_cells is not None:
-        df = centroid_assign(
-            df, recluster_cells, vec_col=vec_col, id_col=id_col, out_col="_semcell"
-        )
+        df = centroid_assign(df, recluster_cells, out_col="_semcell")
         cluster_col = "_semcell"
     # norms computed ONCE per vector on the linear-sized join inputs,
     # not inside the cluster-quadratic pair stage (identical doubles;
@@ -891,15 +785,15 @@ def semantic_dedup(
     # the unexploded salted side (the finding-93/94 mis-broadcast class).
     a = df.select(
         F.col(cluster_col).alias("_cl"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        norm(F.col(vec_col)).alias("_na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("_va"),
+        norm(F.col("embedding")).alias("_na"),
     )
     b = df.select(
         F.col(cluster_col).alias("_cl"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        norm(F.col(vec_col)).alias("_nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("_vb"),
+        norm(F.col("embedding")).alias("_nb"),
     )
     dominated = (
         salted_join(a.hint("shuffle_hash"), b, "_cl", "id_a", SEM_DEDUP_SALTS)
@@ -913,19 +807,19 @@ def semantic_dedup(
             )
             >= threshold
         )
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
-    return df.join(dominated, id_col, "left_anti").drop("_semcell")
+    return df.join(dominated, "vec_id", "left_anti").drop("_semcell")
 
 
-def sq8_quantize_params(corpus: DataFrame, vec_col: str = "embedding") -> tuple[list, list]:
+def sq8_quantize_params(corpus: DataFrame) -> tuple[list, list]:
     """Per-dimension (min, scale) for 8-bit scalar quantization, from
     one posexplode aggregate. dim rows collected — bounded by the
     embedding dimensionality (the codebook-sample boundedness class,
     not a data-sized collect)."""
     stats = (
-        corpus.select(F.posexplode(F.col(vec_col).cast("array<double>")).alias("d", "x"))
+        corpus.select(F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "x"))
         .groupBy("d")
         .agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
         .orderBy("d")
@@ -941,8 +835,6 @@ def sq8_topk(
     queries: DataFrame,
     k: int = 5,
     rerank: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Scalar-quantization (SQ8) ANN: every corpus vector stored as one
     byte per dimension (8× less scan volume than float64), scored
@@ -958,13 +850,13 @@ def sq8_topk(
     no HOF blowup, the arrays are literals)."""
     from automated_property_data_ingestion_document_pipeline_spark.functions.vectors import cosine
 
-    mins, scales = sq8_quantize_params(corpus, vec_col)
+    mins, scales = sq8_quantize_params(corpus)
     lit_mins = F.array(*[F.lit(float(m)) for m in mins])
     lit_scales = F.array(*[F.lit(float(s)) for s in scales])
     # quantize: one byte per dim (stored as tinyint-ranged int)
     codes = F.zip_with(
         F.zip_with(
-            F.col(vec_col).cast("array<double>"), lit_mins, lambda x, m: x - m
+            F.col("embedding").cast("array<double>"), lit_mins, lambda x, m: x - m
         ),
         lit_scales,
         lambda cm, s: F.least(
@@ -977,13 +869,13 @@ def sq8_topk(
         lit_mins,
         lambda cs, m: cs + m,
     )
-    comp = corpus.select(F.col(id_col), codes.alias("_codes")).withColumn("_deq", deq)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
+    comp = corpus.select(F.col("vec_id"), codes.alias("_codes")).withColumn("_deq", deq)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec"))
     approx = comp.join(
-        F.broadcast(q), F.col("query_id") != F.col(id_col)
+        F.broadcast(q), F.col("query_id") != F.col("vec_id")
     ).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         cosine(F.col("_qvec"), F.col("_deq")).alias("_approx"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -997,7 +889,7 @@ def sq8_topk(
     # exact rerank: fetch full vectors for candidates only
     exact = (
         cands.join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")),
+            corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cvec")),
             "neighbor_id",
         )
         .join(F.broadcast(q), "query_id")

@@ -163,8 +163,8 @@ def kmv_build(df: DataFrame, key: str, group: str, k: int = 64) -> DataFrame:
     )
 
 
-def kmv_merge(*sketches: DataFrame, k: int = 64) -> DataFrame:
-    """Union of KMV sketches = k minima of the concatenated (distinct)
+def kmv_merge(*sketches: DataFrame) -> DataFrame:
+    """Union of KMV sketches = the k = 64 minima of the concatenated (distinct)
     hash rows — the mergeability that lets per-shard sketches roll up."""
     from functools import reduce
 
@@ -176,7 +176,7 @@ def kmv_merge(*sketches: DataFrame, k: int = 64) -> DataFrame:
     w = Window.partitionBy("grp").orderBy("hv")
     return (
         allrows.withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= k)
+        .filter(F.col("pos") <= 64)
         .select("grp", "pos", "hv")
     )
 

@@ -24,9 +24,7 @@ from automated_property_data_ingestion_document_pipeline_spark.functions.text im
 # ---- int8 embedding quantization --------------------------------------------
 
 
-def quantize_embeddings(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization per vector: ``scale = 127/max|x|``,
     ``q = round_half_away(x * scale)`` — the storage/serving format for
     embedding shards (4× smaller, dot products stay rank-correlated).
@@ -48,9 +46,9 @@ def quantize_embeddings(
         Q = (np.floor(np.abs(S) + 0.5) * np.sign(S)).astype(np.int32)
         return pd.DataFrame({"qvec": list(Q), "scale": scale})
 
-    out = df.withColumn("_q", _quant(F.col(vec_col)))
+    out = df.withColumn("_q", _quant(F.col("embedding")))
     return out.select(
-        id_col, F.col("_q.qvec").alias("qvec"), F.col("_q.scale").alias("scale")
+        "vec_id", F.col("_q.qvec").alias("qvec"), F.col("_q.scale").alias("scale")
     )
 
 
@@ -59,8 +57,6 @@ def quantize_embeddings(
 
 def pack_sequences(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bin_tokens: int = 2048,
     num_shards: int = 8,
 ) -> DataFrame:
@@ -75,18 +71,18 @@ def pack_sequences(
     overflow rather than split documents (what a packer that respects
     document boundaries does)."""
     d = df.select(
-        F.col(id_col),
-        token_count_ws(F.col(text_col)).cast("bigint").alias("n_tokens"),
-        (F.col(id_col) % num_shards).alias("_shard"),
+        F.col("doc_id"),
+        token_count_ws(F.col("text")).cast("bigint").alias("n_tokens"),
+        (F.col("doc_id") % num_shards).alias("_shard"),
     )
     w = (
         Window.partitionBy("_shard")
-        .orderBy(F.col(id_col).asc())
+        .orderBy(F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     start = F.sum("n_tokens").over(w) - F.col("n_tokens")
     pack = F.col("_shard") * 1_000_000 + F.floor(start / bin_tokens)
-    return d.select(id_col, "n_tokens", pack.cast("bigint").alias("pack_id"))
+    return d.select("doc_id", "n_tokens", pack.cast("bigint").alias("pack_id"))
 
 
 # ---- PII scrubbing -----------------------------------------------------------
@@ -109,8 +105,6 @@ def scrub_pii(col: Column) -> Column:
 def contamination_flags(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 5,
 ) -> DataFrame:
     """Test-set decontamination: flag corpus docs sharing any k-token
@@ -120,16 +114,16 @@ def contamination_flags(
     map-side, so cost is linear in corpus tokens. Returns
     (id, n_shared_shingles)."""
     def doc_shingles(df: DataFrame) -> DataFrame:
-        toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        toked = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
         return toked.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(F.array_distinct(shingles_of(F.col("_toks"), shingle_k))).alias("_sh"),
         )
 
     bench_sh = doc_shingles(benchmark).select("_sh").distinct()
     corpus_sh = doc_shingles(corpus)
     hits = corpus_sh.join(F.broadcast(bench_sh), "_sh")
-    return hits.groupBy(id_col).agg(
+    return hits.groupBy("doc_id").agg(
         F.count_distinct("_sh").cast("bigint").alias("n_shared_shingles")
     )
 

@@ -20,7 +20,6 @@ oracle-covered via parquet keys.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +28,7 @@ from pyspark.sql import types as T
 
 from automated_property_data_ingestion_document_pipeline_spark import catalog
 from automated_property_data_ingestion_document_pipeline_spark.plans.registry import query
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from automated_property_data_ingestion_document_pipeline_spark.session import scratch_dir
 
 _ORACLE = """
     SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
@@ -55,11 +53,6 @@ def _projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scratch(sf_dir: str, name: str) -> str:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_REPO_ROOT, ".scratch", f"{name}_{sf_tag}")
-
-
 @query("q_csv_roundtrip", oracle=_ORACLE)
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write → schema'd read, PERMISSIVE mode, header on. Quoting
@@ -68,7 +61,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge corpus exposed exactly that collision), so the writer emits an
     explicit ``\\N`` null token and the reader maps it back: the only
     lossless CSV null contract."""
-    out = _scratch(sf_dir, "orders_csv")
+    out = scratch_dir(sf_dir, "orders_csv")
     shutil.rmtree(out, ignore_errors=True)
     _projection(spark, sf_dir).write.option("header", True).option(
         "nullValue", "\\N"
@@ -88,7 +81,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write → schema'd read — the dump format every API
     export lands in. Explicit schema skips sampling-based inference
     (a full extra pass at 100 TB)."""
-    out = _scratch(sf_dir, "orders_jsonl")
+    out = scratch_dir(sf_dir, "orders_jsonl")
     shutil.rmtree(out, ignore_errors=True)
     _projection(spark, sf_dir).write.json(out)
     return spark.read.schema(_SCHEMA).json(out)
@@ -99,7 +92,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write → read (built into Spark, no extra package): the other
     columnar lake format, with the same pushdown/pruning levers as
     parquet. Schema comes from the ORC footer."""
-    out = _scratch(sf_dir, "orders_orc")
+    out = scratch_dir(sf_dir, "orders_orc")
     shutil.rmtree(out, ignore_errors=True)
     _projection(spark, sf_dir).write.orc(out)
     return spark.read.orc(out)

@@ -93,7 +93,7 @@ _PR_SCALE = 10**12
 _PR_BASE = 3 * _PR_SCALE // 20  # (1 - 0.85) * scale, exact
 
 
-def _pagerank_oracle_sql(iterations: int = 8) -> str:
+def _pagerank_oracle_sql() -> str:
     """Unrolled fixed-point power iteration: r_{i+1}(d) = base +
     17 * SUM(r_i(s) // odeg(s)) // 20 over in-edges — every step BIGINT
     floor arithmetic, so DuckDB reproduces Spark bit-for-bit."""
@@ -104,14 +104,14 @@ def _pagerank_oracle_sql(iterations: int = 8) -> str:
         "adj AS (SELECT be.s, be.d, o.odeg FROM be JOIN outdeg o ON o.s = be.s)",
         f"r0 AS (SELECT s AS node, CAST({_PR_SCALE} AS BIGINT) AS rank_fp FROM outdeg)",
     ]
-    for i in range(iterations):
+    for i in range(8):
         ctes.append(
             f"r{i + 1} AS (SELECT a.d AS node, "
             f"CAST({_PR_BASE} + (17 * SUM(r.rank_fp // a.odeg)) // 20 AS BIGINT)"
             f" AS rank_fp FROM adj a JOIN r{i} r ON r.node = a.s GROUP BY a.d)"
         )
     return (
-        "WITH " + ",\n    ".join(ctes) + f"\n    SELECT node, rank_fp FROM r{iterations}"
+        "WITH " + ",\n    ".join(ctes) + "\n    SELECT node, rank_fp FROM r8"
     )
 
 

@@ -18,15 +18,8 @@ from pyspark.sql import functions as F
 from automated_property_data_ingestion_document_pipeline_spark import catalog
 from automated_property_data_ingestion_document_pipeline_spark.operators import layout
 from automated_property_data_ingestion_document_pipeline_spark.plans.registry import query
+from automated_property_data_ingestion_document_pipeline_spark.session import scratch_dir
 from automated_property_data_ingestion_document_pipeline_spark.streaming import sinks
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_SCRATCH = os.path.join(_REPO_ROOT, ".scratch")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_SCRATCH, f"{name}_{sf_tag}")
 
 
 # -- schema evolution: mergeSchema over generational writes -------------------
@@ -51,7 +44,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped, no columns lost. The oracle reconstructs the same union
     from the source table, so the driver hash-checks that evolution
     changed nothing but the schema."""
-    out = _scratch(sf_dir, "evolving_docs")
+    out = scratch_dir(sf_dir, "evolving_docs")
     shutil.rmtree(out, ignore_errors=True)
     d = catalog.load(spark, sf_dir, "documents")
     gen1 = d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text", "lang")
@@ -84,7 +77,7 @@ def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     point filter is satisfiable from a minority of files) is asserted
     against real parquet footers in tests/test_layout.py:36-74; file
     layout is not SQL-visible, so that half stays a local invariant."""
-    out = _scratch(sf_dir, "zorder_lineitem")
+    out = scratch_dir(sf_dir, "zorder_lineitem")
     shutil.rmtree(out, ignore_errors=True)
     li = catalog.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
@@ -114,7 +107,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     poor-man's-Delta contract that every published snapshot is a
     complete, consistent past state. The oracle recomputes that past
     state straight from the source table."""
-    state = _scratch(sf_dir, "timetravel_state")
+    state = scratch_dir(sf_dir, "timetravel_state")
     shutil.rmtree(state, ignore_errors=True)
     os.makedirs(state, exist_ok=True)
     ev = catalog.load(spark, sf_dir, "events")
@@ -146,7 +139,7 @@ def q_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted inline — a failure surfaces as a driver ERROR row).
     Storage drops to keep_last × |keys| rows; the retention contract of
     every real table format, on plain parquet."""
-    state = _scratch(sf_dir, "vacuum_state")
+    state = scratch_dir(sf_dir, "vacuum_state")
     shutil.rmtree(state, ignore_errors=True)
     os.makedirs(state, exist_ok=True)
     ev = catalog.load(spark, sf_dir, "events")

@@ -292,7 +292,6 @@ def _portable_pairs_from_tables(
     bydoc_t: str,
     bands_t: str,
     sz_t: str,
-    jacc_min: float = _JACC_MIN,
 ) -> DataFrame:
     """The candidate-join + exact-Jaccard-verify pipeline over
     PERSISTED base tables — the body of q_minhash_portable, split out
@@ -371,7 +370,7 @@ def _portable_pairs_from_tables(
         .filter(
             F.col("n_common").cast("double")
             / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-            >= jacc_min
+            >= _JACC_MIN
         )
     )
     return out
@@ -550,7 +549,6 @@ def embedding_neardup_portable_lane(
     spark: SparkSession,
     sf_dir: str,
     planes: int = _NDP_PLANES,
-    salts: int = _NDP_SALTS,
 ) -> DataFrame:
     """The lane body, parameterized on the GRANULARITY knob (finding
     79 / the §64 lesson): per-bucket verify cost is Σ n_b² with
@@ -619,7 +617,7 @@ def embedding_neardup_portable_lane(
         cosine_with_norms(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")), 6
     )
     pa = (
-        salted_join(a, b, "bucket", "id_a", salts)
+        salted_join(a, b, "bucket", "id_a", _NDP_SALTS)
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("bucket")
         .agg(
@@ -1182,14 +1180,10 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import os as _os
 
-    repo_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
     from automated_property_data_ingestion_document_pipeline_spark.operators import bucketing
+    from automated_property_data_ingestion_document_pipeline_spark.session import SCRATCH
 
-    out_dir = _os.path.join(
-        repo_root, ".scratch", f"stream_neardup_{bucketing.corpus_table_tag(sf_dir)}"
-    )
+    out_dir = _os.path.join(SCRATCH, f"stream_neardup_{bucketing.corpus_table_tag(sf_dir)}")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent per-batch-id dir: a recovery replay OVERWRITES its

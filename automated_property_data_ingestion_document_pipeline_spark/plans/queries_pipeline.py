@@ -7,8 +7,6 @@ pipelines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,10 +19,8 @@ from automated_property_data_ingestion_document_pipeline_spark.operators.dedup i
 )
 from automated_property_data_ingestion_document_pipeline_spark.operators.fanout import fan_out
 from automated_property_data_ingestion_document_pipeline_spark.plans.registry import query
+from automated_property_data_ingestion_document_pipeline_spark.session import scratch_dir
 from automated_property_data_ingestion_document_pipeline_spark.sources import doc_sink, http_source
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_SCRATCH = os.path.join(_REPO_ROOT, ".scratch")
 
 
 # -- F1/F6: required-field quarantine -----------------------------------------
@@ -335,8 +331,7 @@ def q_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition paths cannot represent an empty-string key (it folds into
     __HIVE_DEFAULT_PARTITION__ = NULL on readback), so the oracle maps
     '' → NULL the same way."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_SCRATCH, f"partitioned_docs_{sf_tag}")
+    out = scratch_dir(sf_dir, "partitioned_docs")
     d = catalog.load(spark, sf_dir, "documents")
     doc_sink.archive_partitioned(d, out, ["lang", "source"])
     back = spark.read.parquet(out)
@@ -462,8 +457,7 @@ def q_letter_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document render sink (report_generator.py:88-103): per-partition
     artifact writes via mapInPandas, manifest returned. Sampled subset
     to bound local filesystem churn."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_SCRATCH, f"letters_{sf_tag}")
+    out = scratch_dir(sf_dir, "letters")
     o = catalog.load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
     c = catalog.load(spark, sf_dir, "customer")
     joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -497,8 +491,7 @@ def q_letter_sink_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly like DocxTemplate.render — unknown placeholders (signature,
     initials) render empty. Manifest returned; artifacts are real .docx
     zips."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_SCRATCH, f"letters_docx_{sf_tag}")
+    out = scratch_dir(sf_dir, "letters_docx")
     o = catalog.load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 200 == 0)
     c = catalog.load(spark, sf_dir, "customer")
     joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -531,8 +524,7 @@ def q_letter_sink_ref_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     artificially split-run {{parcel_id}} so the hard case always
     executes."""
     template = doc_sink.load_reference_template_bytes()
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_SCRATCH, f"letters_ref_tpl_{sf_tag}")
+    out = scratch_dir(sf_dir, "letters_ref_tpl")
     o = catalog.load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 500 == 0)
     c = catalog.load(spark, sf_dir, "customer")
     joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -565,8 +557,7 @@ def q_letter_sink_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     parseable .pdf files."""
     from automated_property_data_ingestion_document_pipeline_spark.sources import pdf_sink
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(_SCRATCH, f"letters_pdf_{sf_tag}")
+    out = scratch_dir(sf_dir, "letters_pdf")
     o = catalog.load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 200 == 0)
     c = catalog.load(spark, sf_dir, "customer")
     joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -2613,23 +2604,19 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = d.mapInPandas(_quarantine_payloads, "doc_id bigint, content binary")
     extracted = extract_document_text(docs)
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    qdir = os.path.join(repo_root, ".scratch", f"quarantine_{tag}")
+    qdir = scratch_dir(sf_dir, "quarantine")
 
     partials: list = []
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # three actions consume this batch (quarantine write, clean
-        # count, histogram collect) — persist so the expensive
-        # mapInPandas payload build + extract runs ONCE per row, not
-        # three times (r10 review finding; this lane is bench HEADLINE)
+        # two actions consume this batch (quarantine write, histogram
+        # collect) — persist so the expensive mapInPandas payload build
+        # + extract runs ONCE per row, not twice (r10 review finding;
+        # this lane is bench HEADLINE). The clean branch that
+        # dead_letter_split returns has no sink in this lane.
         batch_df.persist()
         try:
-            clean = dead_letter_split(batch_df, qdir, batch_id)
-            # the clean branch must stay consumable downstream — prove
-            # it with a row count (one job; at scale the main sink)
-            clean.count()
+            dead_letter_split(batch_df, qdir, batch_id)
             partials.extend(
                 batch_df.groupBy(
                     F.coalesce(

@@ -25,6 +25,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Gitignored scratch root of this checkout: the warehouse, lane outputs
+# and stream staging dirs all live under it, never in the repo root.
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+
+
+def scratch_dir(sf_dir: str, name: str) -> str:
+    """``SCRATCH/<name>_<corpus dir basename>``: one output dir per lane and corpus."""
+    return os.path.join(SCRATCH, f"{name}_{os.path.basename(os.path.normpath(sf_dir))}")
+
 # Runtime-settable confs applied to any session we touch.
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
@@ -149,9 +158,7 @@ def get_spark(
         shuffle_partitions = cpus
     # static conf (must be set at build time): bucketed saveAsTable
     # warehouse lives in gitignored scratch, not the repo root
-    warehouse = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "warehouse"
-    )
+    warehouse = os.path.join(SCRATCH, "warehouse")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -1,4 +1,4 @@
-"""Connectors & sinks (SURVEY §2.1, §4.3): JSON ingest, HTTP enrichment
+"""Connectors & sinks (SURVEY §2.1, §4.3): HTTP enrichment
 DataSource, binary/multimodal columns, document render + partitioned
 archive sinks."""
 
@@ -7,5 +7,4 @@ from automated_property_data_ingestion_document_pipeline_spark.sources import ( 
     doc_sink,
     html_source,
     http_source,
-    json_source,
 )

@@ -117,33 +117,26 @@ def _sniff(payload: bytes):
     return iter_tar_members
 
 
-def unpack_archive(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
-    fmt: str = "auto",
-) -> DataFrame:
+def unpack_archive(df: DataFrame) -> DataFrame:
     """One input row (id, archive bytes) → one output row per member
     ``(id, member_name, member_bytes, n_bytes)`` via mapInPandas — the
-    same executor-local flat-map shape as ``sample_frames``. ``fmt``:
-    ``"zip"``, ``"tar"``, or ``"auto"`` (sniff the PK magic). NULL
+    same executor-local flat-map shape as ``sample_frames``. The format
+    is sniffed per payload (the PK magic marks a ZIP). NULL
     payloads produce no rows; malformed archives raise the typed
     :class:`ArchiveUnsupported` so callers can quarantine rather than
     lose the task."""
     import pandas as pd
 
-    walker = {"zip": iter_zip_members, "tar": iter_tar_members, "auto": None}[fmt]
-
     def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, names, blobs, sizes = [], [], [], []
             for rid, payload in zip(
-                pdf[id_col].to_numpy(), pdf[content_col].to_numpy()
+                pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()
             ):
                 if payload is None:
                     continue
                 payload = bytes(payload)
-                it = (walker or _sniff(payload))(payload)
+                it = _sniff(payload)(payload)
                 for name, blob in it:
                     ids.append(rid)
                     names.append(name)
@@ -151,7 +144,7 @@ def unpack_archive(
                     sizes.append(len(blob))
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "member_name": names,
                     "member_bytes": blobs,
                     "n_bytes": pd.Series(sizes, dtype="int64"),
@@ -160,7 +153,7 @@ def unpack_archive(
 
     return df.mapInPandas(
         _unpack,
-        f"{id_col} bigint, member_name string, member_bytes binary, n_bytes bigint",
+        "doc_id bigint, member_name string, member_bytes binary, n_bytes bigint",
     )
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # metadata struct carried alongside every binary payload
@@ -31,13 +31,6 @@ class DecodeUnavailable(NotImplementedError):
     """Raised by real decode paths: media libraries (PIL/ffmpeg/...) are
     not installed in this environment. The deterministic fake path keeps
     the pipeline testable."""
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """binaryFile scan (S4/S5): one row per file with path/length/bytes;
-    Spark parallelizes by file — at scale, prefer many medium objects
-    over few huge ones (source split granularity is the file)."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
 
 def attach_media_meta(df: DataFrame, content_col: str, filename_col: str, media_type: str) -> DataFrame:
@@ -55,8 +48,6 @@ def attach_media_meta(df: DataFrame, content_col: str, filename_col: str, media_
 
 def sample_frames(
     df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
     n_frames: int = 4,
     fake: bool = True,
 ) -> DataFrame:
@@ -86,7 +77,7 @@ def sample_frames(
         for pdf in batches:
             ids, idxs, frames, metas = [], [], [], []
             # zip over columns, not iterrows (~5× per-row Series cost)
-            for rid, payload in zip(pdf[id_col].to_numpy(), pdf[content_col].to_numpy()):
+            for rid, payload in zip(pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()):
                 if payload is None:
                     continue  # NULL payload → no frames (nothing to decode)
                 payload = bytes(payload)
@@ -118,18 +109,16 @@ def sample_frames(
                     frames.append(chunk)
                     metas.append(hashlib.sha256(chunk).hexdigest()[:16])
             yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "frame_bytes": frames, "frame_key": metas}
+                {"doc_id": ids, "frame_idx": idxs, "frame_bytes": frames, "frame_key": metas}
             )
 
     return df.mapInPandas(
-        _sample, f"{id_col} bigint, frame_idx int, frame_bytes binary, frame_key string"
+        _sample, "doc_id bigint, frame_idx int, frame_bytes binary, frame_key string"
     )
 
 
 def resize_image(
     df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
     target_h: int = 32,
     target_w: int = 32,
 ) -> DataFrame:
@@ -188,14 +177,14 @@ def resize_image(
             return decode_jpeg(payload)  # JpegUnsupported → pass-through
 
     out_schema = (
-        f"{id_col} bigint, content binary, decoded boolean, "
+        f"doc_id bigint, content binary, decoded boolean, "
         "height int, width int, channels int"
     )
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, outs, dec, hs, ws, cs = [], [], [], [], [], []
-            for rid, payload in zip(pdf[id_col].to_numpy(), pdf[content_col].to_numpy()):
+            for rid, payload in zip(pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()):
                 if payload is None:
                     continue
                 payload = bytes(payload)
@@ -216,7 +205,7 @@ def resize_image(
                 ids.append(rid)
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "content": outs,
                     "decoded": pd.Series(dec, dtype="bool"),
                     "height": pd.Series(hs, dtype="Int32"),
@@ -228,66 +217,8 @@ def resize_image(
     return df.mapInPandas(_resize, out_schema)
 
 
-def resize_stub(df: DataFrame, content_col: str = "content", target: int = 64) -> DataFrame:
-    """Byte-level resize plumbing (pre-r04 fake path, kept for formats
-    with no in-container decoder): truncates/pads payloads to ``target``
-    bytes deterministically. For PNG payloads prefer
-    :func:`resize_image`, which decodes REAL pixels."""
-    import pandas as pd
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[content_col] = [
-                (bytes(p)[:target]).ljust(target, b"\x00") for p in pdf[content_col]
-            ]
-            yield out
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    return df.mapInPandas(_resize, schema)
-
-
-def extract_features(df: DataFrame, content_col: str = "content", fake: bool = True) -> DataFrame:
-    """Feature-extraction over binary media via mapInPandas (Arrow
-    batches of bytes → fixed-width feature vectors).
-
-    ``fake=True`` derives a deterministic 8-dim feature vector from the
-    payload hash — the real decode raises DecodeUnavailable, marking
-    exactly where PIL/ffmpeg plug in. Batch shape, schema, and
-    partitioning are identical either way, which is the part that has to
-    be right at 100 TB (bytes never leave the executor; one Python
-    worker per core streams Arrow batches).
-    """
-    import hashlib
-
-    import pandas as pd
-
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["features array<double>"]
-    )
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf[content_col]:
-                if not fake:
-                    raise DecodeUnavailable(
-                        "real media decode requires PIL/ffmpeg; not in container"
-                    )
-                h = hashlib.sha256(bytes(payload)).digest()
-                feats.append([b / 255.0 for b in h[:8]])
-            out = pdf.copy()
-            out["features"] = feats
-            yield out
-
-    return df.mapInPandas(_extract, out_schema)
-
-
 def chunk_audio(
     df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
     sample_rate: int = 16_000,
     bytes_per_sample: int = 2,
     chunk_seconds: float = 30.0,
@@ -322,7 +253,7 @@ def chunk_audio(
     def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, starts, ends, chunks = [], [], [], [], []
-            for rid, payload in zip(pdf[id_col].to_numpy(), pdf[content_col].to_numpy()):
+            for rid, payload in zip(pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()):
                 if payload is None:
                     continue
                 payload = bytes(payload)
@@ -354,7 +285,7 @@ def chunk_audio(
                     chunks.append(seg)
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "chunk_idx": idxs,
                     "start_ms": starts,
                     "end_ms": ends,
@@ -364,7 +295,7 @@ def chunk_audio(
 
     return df.mapInPandas(
         _chunk,
-        f"{id_col} bigint, chunk_idx int, start_ms bigint, end_ms bigint, chunk_bytes binary",
+        "doc_id bigint, chunk_idx int, start_ms bigint, end_ms bigint, chunk_bytes binary",
     )
 
 
@@ -373,9 +304,7 @@ class UnsupportedDocumentFormat(ValueError):
     the sniffing contract of :func:`extract_document_text`."""
 
 
-def extract_document_text(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_document_text(df: DataFrame) -> DataFrame:
     """The S7/S8 read halves as ONE user-facing column operator (r08):
     sniff each binary payload — ``%PDF-`` → the xref-indexed PDF
     extractor, ``PK`` zip → the OOXML paragraph extractor — and emit
@@ -388,7 +317,7 @@ def extract_document_text(
     import pandas as pd
 
     out_schema = (
-        f"{id_col} bigint, kind string, n_items bigint, n_chars bigint, "
+        f"doc_id bigint, kind string, n_items bigint, n_chars bigint, "
         "text string, error string"
     )
 
@@ -404,11 +333,11 @@ def extract_document_text(
 
         for pdf in batches:
             cols: dict = {
-                id_col: [], "kind": [], "n_items": [], "n_chars": [],
+                "doc_id": [], "kind": [], "n_items": [], "n_chars": [],
                 "text": [], "error": [],
             }
             for rid, payload in zip(
-                pdf[id_col].to_numpy(), pdf[content_col].to_numpy()
+                pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()
             ):
                 payload = b"" if payload is None else bytes(payload)
                 kind = items = chars = text = err = None
@@ -431,7 +360,7 @@ def extract_document_text(
                 ) as e:
                     kind = text = None
                     err = f"{type(e).__name__}: {e}"
-                cols[id_col].append(int(rid))
+                cols["doc_id"].append(int(rid))
                 cols["kind"].append(kind)
                 cols["n_items"].append(items)
                 cols["n_chars"].append(chars)
@@ -439,7 +368,7 @@ def extract_document_text(
                 cols["error"].append(err)
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(cols[id_col], dtype="int64"),
+                    "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
                     "kind": cols["kind"],
                     "n_items": pd.Series(cols["n_items"], dtype="Int64"),
                     "n_chars": pd.Series(cols["n_chars"], dtype="Int64"),

@@ -26,7 +26,6 @@ from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 try:  # executor-local optional dep; the built-in OOXML writer is default
     import docxtpl  # type: ignore  # noqa: F401
@@ -84,12 +83,12 @@ DOCX_TEMPLATE_LINES = [
 _PLACEHOLDER_RE = re.compile(r"\{\{\s*(\w+)\s*\}\}")
 
 
-def render_template_lines(context: dict, lines: list[str] | None = None) -> list[str]:
-    """docxtpl-style substitution: every ``{{key}}`` replaced from the
-    context; unknown keys → '' (jinja's default-undefined contract)."""
-    lines = DOCX_TEMPLATE_LINES if lines is None else lines
+def render_template_lines(context: dict) -> list[str]:
+    """docxtpl-style substitution: every ``{{key}}`` of the letter
+    template replaced from the context; unknown keys → '' (jinja's
+    default-undefined contract)."""
     sub = lambda m: str(context.get(m.group(1), ""))  # noqa: E731
-    return [_PLACEHOLDER_RE.sub(sub, ln) for ln in lines]
+    return [_PLACEHOLDER_RE.sub(sub, ln) for ln in DOCX_TEMPLATE_LINES]
 
 
 def docx_bytes_from_lines(lines: list[str]) -> bytes:
@@ -119,11 +118,11 @@ def docx_bytes_from_lines(lines: list[str]) -> bytes:
     return buf.getvalue()
 
 
-def render_docx(context: dict, lines: list[str] | None = None) -> bytes:
+def render_docx(context: dict) -> bytes:
     """The reference's ``DocxTemplate(...).render(context)`` + save
     (report_generator.py:70-89) as one pure function: context → .docx
     bytes."""
-    return docx_bytes_from_lines(render_template_lines(context, lines))
+    return docx_bytes_from_lines(render_template_lines(context))
 
 
 def render_letters(letters: DataFrame, out_dir: str) -> DataFrame:
@@ -489,31 +488,21 @@ def archive_partitioned(df: DataFrame, out_dir: str, keys: list[str]) -> None:
     df.write.mode("overwrite").partitionBy(*keys).parquet(out_dir)
 
 
-def soffice_convert_partition(paths: Iterator[str], soffice_bin: str = "soffice") -> Iterator[str]:
+def soffice_convert_partition(paths: Iterator[str]) -> Iterator[str]:
     """Per-partition PDF conversion: deterministic headless subprocess
     per file (report_generator.py:92-103), executor-local. Gated: raises
     if soffice is absent (not in this container)."""
     import shutil
     import subprocess
 
-    if shutil.which(soffice_bin) is None:
-        raise FileNotFoundError(f"{soffice_bin} not installed (container limitation)")
+    if shutil.which("soffice") is None:
+        raise FileNotFoundError("soffice not installed (container limitation)")
     for p in paths:
         subprocess.run(
-            [soffice_bin, "--headless", "--convert-to", "pdf", "--outdir", os.path.dirname(p), p],
+            ["soffice", "--headless", "--convert-to", "pdf", "--outdir", os.path.dirname(p), p],
             check=True,
             timeout=120,  # the reference's generate budget (App.js:444)
         )
         yield p
 
 
-def last_win_then_archive(df: DataFrame, out_dir: str) -> DataFrame:
-    """Compose the reference's idempotent-overwrite semantics: keep the
-    newest row per client_key, then archive partitioned by key."""
-    from automated_property_data_ingestion_document_pipeline_spark.operators.dedup import (
-        last_write_wins,
-    )
-
-    latest = last_write_wins(df, ["client_key"], [F.col("created_ts")])
-    archive_partitioned(latest, out_dir, ["client_key"])
-    return latest

@@ -1042,8 +1042,6 @@ def encode_jpeg_progressive_from_coeffs(
     comp_coeffs: list[list[np.ndarray]],
     sampling: list[tuple[int, int]] | None = None,
     scans: list[tuple[list[int], int, int, int, int]] | None = None,
-    qt_luma: np.ndarray = STD_QT_LUMA,
-    qt_chroma: np.ndarray = STD_QT_CHROMA,
     restart_interval: int = 0,
 ) -> bytes:
     """Fixture writer for PROGRESSIVE (SOF2) streams: same coefficient
@@ -1072,7 +1070,7 @@ def encode_jpeg_progressive_from_coeffs(
                 ([ci], 1, 63, 1, 0),
             ]
     out = bytearray(b"\xff\xd8")
-    qts = [(0, qt_luma)] + ([(1, qt_chroma)] if ncomp == 3 else [])
+    qts = [(0, STD_QT_LUMA)] + ([(1, STD_QT_CHROMA)] if ncomp == 3 else [])
     out += _dqt_segment(qts)
     sof = struct.pack(">BHHB", 8, h, w, ncomp)
     for i in range(ncomp):
@@ -1180,45 +1178,3 @@ def encode_jpeg_progressive_from_coeffs(
     return bytes(out)
 
 
-def encode_jpeg(pixels: np.ndarray, qt: np.ndarray = STD_QT_LUMA) -> bytes:
-    """Minimal real encoder (grayscale or RGB, always 4:4:4): forward
-    DCT + quantize with `qt` (luma table for every component, emitted as
-    table 0/1) → the same entropy writer. Exists for round-trip tests
-    (decode(encode(img)) ≈ img within quantization error), not as a
-    production sink."""
-    if pixels.ndim == 2:
-        pixels = pixels[:, :, None]
-    h, w, c = pixels.shape
-    if c == 3:
-        p = pixels.astype(np.float64)
-        y = 0.299 * p[..., 0] + 0.587 * p[..., 1] + 0.114 * p[..., 2]
-        cb = -0.168736 * p[..., 0] - 0.331264 * p[..., 1] + 0.5 * p[..., 2]
-        cr = 0.5 * p[..., 0] - 0.418688 * p[..., 1] - 0.081312 * p[..., 2]
-        planes = [y - 128.0, cb, cr]
-    elif c == 1:
-        planes = [pixels[..., 0].astype(np.float64) - 128.0]
-    else:
-        raise ValueError("gray or RGB only")
-    qts = [qt, STD_QT_CHROMA] if c == 3 else [qt]
-    comp_coeffs: list[list[np.ndarray]] = []
-    for ci, plane in enumerate(planes):
-        ph = -(-h // 8) * 8
-        pw = -(-w // 8) * 8
-        padded = np.zeros((ph, pw), dtype=np.float64)
-        padded[:h, :w] = plane
-        if h < ph:
-            padded[h:, :w] = plane[-1:, :]
-        if w < pw:
-            padded[:, w:] = padded[:, w - 1 : w]
-        q = qts[min(ci, 1)].astype(np.float64)
-        blocks = []
-        for by in range(ph // 8):
-            for bx in range(pw // 8):
-                blk = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                coeffs = _IDCT_A @ blk @ _IDCT_A.T  # forward DCT (A orthogonalized)
-                blocks.append(np.round(coeffs / q).astype(np.int64))
-        comp_coeffs.append(blocks)
-    return encode_jpeg_from_coeffs(
-        h, w, comp_coeffs, sampling=[(1, 1)] * c,
-        qt_luma=qts[0], qt_chroma=qts[min(1, len(qts) - 1)],
-    )

@@ -815,9 +815,7 @@ def compute_o_oe_v5(
     return o, oe
 
 
-def compute_perms_v5(
-    p: int, encrypt_metadata: bool, file_key: bytes, fill: bytes = b"adbf"
-) -> bytes:
+def compute_perms_v5(p: int, encrypt_metadata: bool, file_key: bytes) -> bytes:
     """Algorithm 10: the /Perms block — P as a little-endian int64
     (high bytes 0xFF), 'T'/'F' for /EncryptMetadata, the literal 'adb'
     sentinel, 4 spec-'random' tail bytes (caller-fixed here: writers in
@@ -827,7 +825,7 @@ def compute_perms_v5(
         + b"\xff\xff\xff\xff"
         + (b"T" if encrypt_metadata else b"F")
         + b"adb"
-        + fill[:4].ljust(4, b"\x00")
+        + b"adbf"
     )
     return aes_ecb_encrypt(file_key, block)
 

@@ -327,7 +327,7 @@ def pdf_bytes_encrypted(
         b"/Encoding /WinAnsiEncoding >>",
     ]
     for i, page_lines in enumerate(pages):
-        stream = _content_stream(page_lines, "Tj")
+        stream = _content_stream(page_lines)
         if compress:
             stream = zlib.compress(stream, 6)
         enc = _enc(5 + 2 * i, stream)
@@ -365,7 +365,6 @@ def pdf_bytes_encrypted(
 def pdf_bytes_modern(
     lines: list[str],
     predictor: bool = False,
-    text_op: str = "Tj",
     encrypt_method: "str | None" = None,
     user_pw: bytes = b"",
     owner_pw: bytes = b"spark-graft-owner",
@@ -451,7 +450,7 @@ def pdf_bytes_modern(
         % (len(members), len(stm_head), len(stm_flate), stm_flate)
     )
     for i, page_lines in enumerate(pages):
-        content = zlib.compress(_content_stream(page_lines, text_op), 6)
+        content = zlib.compress(_content_stream(page_lines), 6)
         if _enc is not None:
             content = _enc(5 + n + i, content)
         offsets[5 + n + i] = len(buf)
@@ -541,17 +540,15 @@ def pdf_incremental_update(base: bytes, replacements: "dict[int, bytes]") -> byt
     return bytes(out)
 
 
-def pdf_bytes_with_incremental_update(
-    lines: list[str], decoy: str = "SUPERSEDED"
-) -> bytes:
-    """A PDF whose FIRST generation shows ``decoy`` on every line and
+def pdf_bytes_with_incremental_update(lines: list[str]) -> bytes:
+    """A PDF whose FIRST generation shows ``SUPERSEDED`` on every line and
     whose appended incremental update replaces every page content
     stream with the real ``lines``. An extractor that resolves objects
     by first byte-scan match extracts the stale decoy text — the
     failure mode the xref-chain index exists to prevent, made
     driver-visible via q_pdf_extract's form cycle."""
     n = max(len(lines), 1)
-    base = pdf_bytes_from_lines([decoy] * n)
+    base = pdf_bytes_from_lines(["SUPERSEDED"] * n)
     pages = [
         lines[i : i + LINES_PER_PAGE] for i in range(0, len(lines), LINES_PER_PAGE)
     ] or [[]]

@@ -102,13 +102,13 @@ def _values_sql(rows: list[tuple[str, str]], alias: str, cols: tuple[str, str]) 
     return f"(VALUES {values}) AS {alias}({cols[0]}, {cols[1]})"
 
 
-def states_values_sql(alias: str = "s") -> str:
-    return _values_sql(STATES, alias, ("state_code", "state_label"))
+def states_values_sql() -> str:
+    return _values_sql(STATES, "s", ("state_code", "state_label"))
 
 
-def counties_values_sql(alias: str = "c") -> str:
-    return _values_sql(UI_COUNTIES, alias, ("county_name", "state_code"))
+def counties_values_sql() -> str:
+    return _values_sql(UI_COUNTIES, "c", ("county_name", "state_code"))
 
 
-def crs_codes_values_sql(alias: str = "k") -> str:
-    return _values_sql(CRS_CODES, alias, ("county_name", "crs_code"))
+def crs_codes_values_sql() -> str:
+    return _values_sql(CRS_CODES, "k", ("county_name", "crs_code"))

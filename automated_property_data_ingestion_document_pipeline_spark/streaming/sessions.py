@@ -25,6 +25,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+# Event-time lateness every stateful operator here tolerates before it
+# drops an event and frees its state.
+WATERMARK = "2 hours"
+
 # The physical type of ``ts`` depends on how the corpus was generated:
 # TIMESTAMP(NANOS) footers arrive as nano-epoch long under
 # session.tune's ``nanosAsLong`` and need truncation to micros;
@@ -65,9 +69,10 @@ def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
         corpus_table_tag,
     )
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from automated_property_data_ingestion_document_pipeline_spark.session import SCRATCH
+
     src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    d = os.path.join(repo_root, ".scratch", f"stream_{table}_{corpus_table_tag(sf_dir)}")
+    d = os.path.join(SCRATCH, f"stream_{table}_{corpus_table_tag(sf_dir)}")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, f"{table}.parquet")
     if os.path.islink(link):
@@ -135,11 +140,11 @@ def read_events_stream(
     return raw
 
 
-def session_agg(stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
+def session_agg(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Gap-based session windows per user with late-data watermark —
     the streaming twin of operators/sessionize.py."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("session"), F.col("user_id"))
         .agg(
             F.count("*").alias("n_events"),
@@ -150,25 +155,23 @@ def session_agg(stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 
     )
 
 
-def dedup_within_watermark(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_within_watermark(stream: DataFrame) -> DataFrame:
     """Duplicate/stale discard (App.js:354-357 abort-stale):
     dropDuplicatesWithinWatermark on the event id."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    return stream.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def tumbling_counts(stream: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
+def tumbling_counts(stream: DataFrame, width: str = "1 hour") -> DataFrame:
     """Tumbling-window per-type counts (T3)."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", width).alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("bucket_start"), "event_type", "n_events")
     )
 
 
-def purchase_view_join(
-    stream: DataFrame, watermark: str = "2 hours", within: str = "1 hour"
-) -> DataFrame:
+def purchase_view_join(stream: DataFrame, within: str = "1 hour") -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
     user's views in the preceding ``within`` window — the attribution
     join every event pipeline runs.
@@ -184,7 +187,7 @@ def purchase_view_join(
             F.col("ts").alias("view_ts"),
             F.col("event_id").alias("view_event_id"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", WATERMARK)
     )
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
@@ -193,7 +196,7 @@ def purchase_view_join(
             F.col("ts").alias("purchase_ts"),
             F.col("event_id").alias("purchase_event_id"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     return purchases.join(
         views,
@@ -238,7 +241,7 @@ def ewma_fold(batch_pdf, y: float | None, n: int) -> tuple[float | None, int]:
     return y, n
 
 
-def ewma_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def ewma_stream(stream: DataFrame) -> DataFrame:
     """Streaming EWMA (α = 1/2) per user — the unbounded-key form of
     plans/queries_timeseries.q_ewma. Per-key GroupState carries
     (ewma, n); each micro-batch sorts its rows by (ts, event_id) and
@@ -279,7 +282,7 @@ def ewma_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
         yield pd.DataFrame([(uid, n, y)], columns=["user_id", "n_events", "ewma_cents"])
 
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             process, out_struct, state_struct, "update", GroupStateTimeout.NoTimeout

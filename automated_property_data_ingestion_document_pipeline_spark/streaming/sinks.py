@@ -99,9 +99,7 @@ def _state_versions(state_dir: str) -> list[int]:
     return sorted(out)
 
 
-def upsert_aggregate_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int, key: str = "user_id"
-) -> None:
+def upsert_aggregate_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """Streaming materialized view maintenance: merge each micro-batch's
     partial aggregate into a parquet-backed state table (the
     foreachBatch upsert pattern — what you do when the serving store is
@@ -129,7 +127,7 @@ def upsert_aggregate_batch(
     spark = batch_df.sparkSession
     version = os.path.join(state_dir, f"v{batch_id}")
     if not os.path.exists(os.path.join(version, "_SUCCESS")):
-        partial = batch_df.groupBy(key).agg(
+        partial = batch_df.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.sum(F.round(F.col("value") * 100, 0).try_cast("bigint")).alias("cents"),
         )
@@ -139,9 +137,9 @@ def upsert_aggregate_batch(
             merged = (
                 prev.withColumnRenamed("n_events", "_pn")
                 .withColumnRenamed("cents", "_pc")
-                .join(partial, key, "full_outer")
+                .join(partial, "user_id", "full_outer")
                 .select(
-                    key,
+                    "user_id",
                     (F.coalesce("_pn", F.lit(0)) + F.coalesce("n_events", F.lit(0))).alias(
                         "n_events"
                     ),

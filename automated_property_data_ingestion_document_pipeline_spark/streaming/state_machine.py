@@ -92,26 +92,6 @@ def _replay_core(uid, event_types, tss, propss, step, n, start, last):
     return out, (step, n, start, last)
 
 
-def _replay(events: pd.DataFrame) -> list[tuple]:
-    """Replay one user's ordered events from a cold start; emit one row
-    per completed/aborted run plus a trailing in_progress row."""
-    uid = int(events["user_id"].iloc[0])
-    propss = events["props"].to_numpy() if "props" in events.columns else None
-    out, (step, n, start, last) = _replay_core(
-        uid,
-        events["event_type"].to_numpy(),
-        events["ts"].to_numpy(),
-        propss,
-        0,
-        0,
-        None,
-        None,
-    )
-    if n > 0:
-        out.append((uid, "in_progress", step, n, start, last))
-    return out
-
-
 def _wizard_stream(batches):
     """Sequential replay over a sorted per-partition Arrow stream; the
     machine state carries across user boundaries AND batch boundaries.

@@ -22,14 +22,57 @@ import math
 import numpy as np
 import pytest
 
+from automated_property_data_ingestion_document_pipeline_spark.sources import jpeg
 from automated_property_data_ingestion_document_pipeline_spark.sources.jpeg import (
     STD_QT_CHROMA,
     STD_QT_LUMA,
     JpegUnsupported,
     decode_jpeg,
-    encode_jpeg,
     encode_jpeg_from_coeffs,
 )
+
+
+def encode_jpeg(pixels: np.ndarray) -> bytes:
+    """Fixture encoder (grayscale or RGB, always 4:4:4): forward DCT,
+    quantize with the standard luma table (chroma table for Cb/Cr), then
+    the codec's own entropy writer. For round-trip tests only:
+    decode(encode(img)) ≈ img within quantization error."""
+    if pixels.ndim == 2:
+        pixels = pixels[:, :, None]
+    h, w, c = pixels.shape
+    if c == 3:
+        p = pixels.astype(np.float64)
+        y = 0.299 * p[..., 0] + 0.587 * p[..., 1] + 0.114 * p[..., 2]
+        cb = -0.168736 * p[..., 0] - 0.331264 * p[..., 1] + 0.5 * p[..., 2]
+        cr = 0.5 * p[..., 0] - 0.418688 * p[..., 1] - 0.081312 * p[..., 2]
+        planes = [y - 128.0, cb, cr]
+    elif c == 1:
+        planes = [pixels[..., 0].astype(np.float64) - 128.0]
+    else:
+        raise ValueError("gray or RGB only")
+    qts = [STD_QT_LUMA, STD_QT_CHROMA] if c == 3 else [STD_QT_LUMA]
+    comp_coeffs: list[list[np.ndarray]] = []
+    for ci, plane in enumerate(planes):
+        ph = -(-h // 8) * 8
+        pw = -(-w // 8) * 8
+        padded = np.zeros((ph, pw), dtype=np.float64)
+        padded[:h, :w] = plane
+        if h < ph:
+            padded[h:, :w] = plane[-1:, :]
+        if w < pw:
+            padded[:, w:] = padded[:, w - 1 : w]
+        q = qts[min(ci, 1)].astype(np.float64)
+        blocks = []
+        for by in range(ph // 8):
+            for bx in range(pw // 8):
+                blk = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+                coeffs = jpeg._IDCT_A @ blk @ jpeg._IDCT_A.T  # forward DCT (A orthogonalized)
+                blocks.append(np.round(coeffs / q).astype(np.int64))
+        comp_coeffs.append(blocks)
+    return encode_jpeg_from_coeffs(
+        h, w, comp_coeffs, sampling=[(1, 1)] * c,
+        qt_luma=qts[0], qt_chroma=qts[min(1, len(qts) - 1)],
+    )
 
 
 def ref_idct(coeffs: np.ndarray) -> np.ndarray:
