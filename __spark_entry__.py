@@ -98,6 +98,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # r14-rewritten lanes that no driver run has re-witnessed yet, and the
 # two PageRank lanes moved onto the adjacency-list loop (same integer
 # contributions, so q_pagerank_portable's output must not change).
+# Also the PDF-reading lanes, whose lexers now jump by regex search
+# (same spans, so the extracted text must not change), and the lanes
+# whose result or reference dimensions are now built as Arrow local
+# tables (same rows and types).
 _MANUAL_PRIORITY: list[str] = [
     "q_semantic_dedup",
     "q_embedding_neardup_portable",
@@ -107,6 +111,13 @@ _MANUAL_PRIORITY: list[str] = [
     "q_groupby_agg",
     "q_pagerank_portable",
     "q_pagerank",
+    "q_letter_roundtrip",
+    "q_stream_quarantine",
+    "q_pdf_extract",
+    "q_doc_text_extract",
+    "q_ref_dim_join",
+    "q_ref_crs_diff",
+    "q_ref_state_coverage",
 ]
 
 

@@ -89,3 +89,21 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view (for spark.sql paths)."""
     for name in TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def local_frame(spark: SparkSession, rows: "list[tuple]", ddl: str) -> DataFrame:
+    """A small driver-side table as a ``LocalTableScan``. Rows go to the
+    JVM as one Arrow table, so no Python worker runs when the frame is
+    read; ``createDataFrame`` over a Python list plans ``Scan
+    ExistingRDD`` instead, which costs one PythonRDD task per core on
+    every read. Nulls and the declared ``ddl`` types are kept, and zero
+    rows give an empty frame of that schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

@@ -34,14 +34,14 @@ from automated_property_data_ingestion_document_pipeline_spark.operators.joins i
 MAX_QUERY_SIDE = 65_536
 
 
-def _bounded_query_rows(queries: DataFrame, id_col: str, vec_col: str) -> list:
+def _bounded_query_rows(queries: DataFrame) -> list:
     """Collect the query side under :data:`MAX_QUERY_SIDE`, raising a
     clear contract error instead of a driver OOM on misuse (e.g.
     ``pq_topk(corpus, corpus)`` at scale). ``limit(cap+1)`` bounds the
     transfer even on the failure path."""
     rows = (
-        queries.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
+        queries.select("vec_id", "embedding")
+        .orderBy(F.col("vec_id").asc())
         .limit(MAX_QUERY_SIDE + 1)
         .collect()
     )
@@ -420,7 +420,7 @@ def pq_scored_candidates(
 
     Output: ``(query_id, neighbor_id, approx_sim)`` — feed to
     :func:`pq_topk` for exact rerank."""
-    q_rows = _bounded_query_rows(queries, "vec_id", "embedding")
+    q_rows = _bounded_query_rows(queries)
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
     Q = np.array([[float(x) for x in r["embedding"]] for r in q_rows])
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
@@ -558,7 +558,7 @@ def ivfpq_topk(
     sub = dim // num_subspaces
     n_probe = min(nprobe, len(cents_n))
 
-    q_rows = _bounded_query_rows(queries, "vec_id", "embedding")
+    q_rows = _bounded_query_rows(queries)
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
     Q = np.array([[float(x) for x in r["embedding"]] for r in q_rows])
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)

@@ -1220,6 +1220,6 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     schema = "doc_id bigint, n_cand bigint, n_dup bigint, max_jaccard double"
     if not part_files:
-        return spark.createDataFrame([], schema)
+        return catalog.local_frame(spark, [], schema)
     out = spark.read.schema(schema).parquet(out_dir)
     return out.select("doc_id", "n_cand", "n_dup", "max_jaccard")

@@ -2666,6 +2666,6 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (ek, kd, n, s) for (ek, kd), (n, s) in sorted(merged.items(), key=str)
     ]
-    return spark.createDataFrame(
-        rows, "err_kind string, kind string, n_docs bigint, n_items_sum bigint"
+    return catalog.local_frame(
+        spark, rows, "err_kind string, kind string, n_docs bigint, n_items_sum bigint"
     )

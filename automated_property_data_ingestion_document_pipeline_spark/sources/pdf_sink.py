@@ -714,40 +714,37 @@ def _stream_length(dct: bytes, idx: "_ObjIndex") -> int:
 
 
 _MAX_DICT_BYTES = 1 << 20  # a single object dictionary longer than 1 MB is hostile
+_DICT_TOKEN_RE = re.compile(rb"<<|>>|[(<]")
+_DICT_STR_END_RE = re.compile(rb"[\\)]")
 
 
 def _dict_span(payload: bytes, at: int) -> int:
     """Return the index just past the ``>>`` closing the dictionary whose
     ``<<`` starts at ``at``, skipping literal strings (escape-aware) and
     hex strings so a ``<<`` inside ``/Title (…)`` can't unbalance the
-    scan. Typed refusal on truncation or a hostile 1 MB+ dictionary."""
+    scan. Typed refusal on truncation or a hostile 1 MB+ dictionary.
+    Jumps by regex search to the next byte that can start a token, not
+    byte by byte; a token may start on the cap's last byte, so a ``<<``
+    straddling the cap still reads as ``<<``."""
     i, depth, end = at, 0, min(len(payload), at + _MAX_DICT_BYTES)
-    while i < end:
-        two = payload[i : i + 2]
-        if two == b"<<":
+    while (m := _DICT_TOKEN_RE.search(payload, i, end + 1)) and m.start() < end:
+        tok, i = m.group(), m.end()
+        if tok == b"<<":
             depth += 1
-            i += 2
-        elif two == b">>":
+        elif tok == b">>":
             depth -= 1
-            i += 2
             if depth == 0:
                 return i
-        elif payload[i : i + 1] == b"(":
-            i += 1
-            while i < end:
-                c = payload[i : i + 1]
-                if c == b"\\":
-                    i += 2
-                elif c == b")":
-                    i += 1
-                    break
-                else:
-                    i += 1
-        elif payload[i : i + 1] == b"<":  # hex string
-            j = payload.find(b">", i + 1)
+        elif tok == b"(":  # literal string: a backslash escapes the next byte
+            s = _DICT_STR_END_RE.search(payload, i, end)
+            while s and s.group() == b"\\":
+                s = _DICT_STR_END_RE.search(payload, s.start() + 2, end)
+            if s is None:
+                break
+            i = s.end()
+        else:  # hex string
+            j = payload.find(b">", i)
             i = (j + 1) if j != -1 else end
-        else:
-            i += 1
     raise PdfUnsupported("unterminated or oversized object dictionary")
 
 
@@ -793,6 +790,22 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
         out += row
         prev = row
     return bytes(out)
+
+
+_OBJ_HEADER_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+_LINE_OBJ_HEADER_RE = re.compile(rb"[\r\n](\d+)\s+(\d+)\s+obj\b")
+
+
+def _obj_headers(payload: bytes) -> "Iterator[re.Match[bytes]]":
+    """The ``N G obj`` headers that start the payload or a line: the
+    matches of ``re.finditer(rb"(?:^|[\\r\\n])(\\d+)\\s+(\\d+)\\s+obj\\b",
+    payload)``. Two patterns, because the ``^`` alternative stops the
+    regex engine from jumping between line breaks; as one pattern this
+    scan was a fifth of :func:`extract_pdf_text`'s time."""
+    m = _OBJ_HEADER_RE.match(payload)
+    if m is not None:
+        yield m
+    yield from _LINE_OBJ_HEADER_RE.finditer(payload, m.end() if m else 0)
 
 
 class _ObjIndex:
@@ -1020,7 +1033,7 @@ class _ObjIndex:
         payload = self.payload
         best: dict[int, tuple[int, int]] = {}  # num -> (gen, body offset)
         consumed_to = 0
-        for m in re.finditer(rb"(?:^|[\r\n])(\d+)\s+(\d+)\s+obj\b", payload):
+        for m in _obj_headers(payload):
             if m.start() < consumed_to:
                 continue
             num, gen, body = int(m.group(1)), int(m.group(2)), m.end()
@@ -1715,25 +1728,31 @@ def _page_fonts(
     return fonts
 
 
+_ESCAPE_RE = re.compile(rb"\\([0-7]{1,3}|\r\n|.)", re.S)
+_ESCAPED_CONTROLS = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\x08", b"f": b"\x0c"}
+
+
+def _unescape_one(m: "re.Match[bytes]") -> bytes:
+    g = m.group(1)
+    if g[:1].isdigit():
+        return bytes([int(g, 8) & 0xFF])
+    if g in (b"\n", b"\r", b"\r\n"):
+        return b""
+    return _ESCAPED_CONTROLS.get(g, g)
+
+
 def _pdf_unescape(raw: bytes) -> str:
     """PDF literal-string unescape (spec §7.3.4.2): ``\\n \\r \\t \\b
     \\f`` map to their controls, ``\\ooo`` octal (1–3 digits) to that
     byte, backslash-EOL is a line continuation (dropped), and any other
     escaped char is itself — which keeps the writer's own ``\\( \\) \\\\``
     behavior bit-identical to the pre-r07 single-pass unescape."""
-    import re
+    if b"\\" not in raw:
+        return raw.decode("latin-1")
+    return _ESCAPE_RE.sub(_unescape_one, raw).decode("latin-1")
 
-    _C = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\x08", b"f": b"\x0c"}
 
-    def sub(m: "re.Match[bytes]") -> bytes:
-        g = m.group(1)
-        if g[:1].isdigit():
-            return bytes([int(g, 8) & 0xFF])
-        if g in (b"\n", b"\r", b"\r\n"):
-            return b""
-        return _C.get(g, g)
-
-    return re.sub(rb"\\([0-7]{1,3}|\r\n|.)", sub, raw, flags=re.S).decode("latin-1")
+_LIT_TOKEN_RE = re.compile(rb"[\\()]")
 
 
 def _lit_span(stream: bytes, i: int) -> tuple[bytes, int]:
@@ -1743,22 +1762,19 @@ def _lit_span(stream: bytes, i: int) -> tuple[bytes, int]:
     inside literal strings — pdflatex emits ``(a (b) c) Tj`` — which a
     flat regex truncated at the first ``)`` (r07 advice). Inner parens
     stay verbatim in the span; :func:`_pdf_unescape` leaves them
-    intact."""
-    depth, j, n = 1, i + 1, len(stream)
-    while j < n:
-        c = stream[j]
-        if c == 0x5C:  # backslash consumes the next char atomically
-            j += 2
-        elif c == 0x28:  # (
-            depth += 1
+    intact. Jumps by regex search from one backslash or paren to the
+    next, not byte by byte."""
+    depth, j = 1, i + 1
+    while m := _LIT_TOKEN_RE.search(stream, j):
+        c, j = m.group(), m.end()
+        if c == b"\\":  # backslash consumes the next char atomically
             j += 1
-        elif c == 0x29:  # )
+        elif c == b"(":
+            depth += 1
+        else:
             depth -= 1
             if depth == 0:
-                return stream[i + 1 : j], j + 1
-            j += 1
-        else:
-            j += 1
+                return stream[i + 1 : j - 1], j
     raise PdfUnsupported("unterminated literal string")
 
 

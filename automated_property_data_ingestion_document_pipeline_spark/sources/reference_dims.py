@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from automated_property_data_ingestion_document_pipeline_spark.catalog import local_frame
+
 # App.js:10-14
 STATES: list[tuple[str, str]] = [
     ("TN", "Tennessee"),
@@ -83,15 +85,15 @@ CRS_CODES: list[tuple[str, str]] = [
 
 
 def states_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(STATES, "state_code string, state_label string")
+    return local_frame(spark, STATES, "state_code string, state_label string")
 
 
 def counties_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(UI_COUNTIES, "county_name string, state_code string")
+    return local_frame(spark, UI_COUNTIES, "county_name string, state_code string")
 
 
 def crs_codes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CRS_CODES, "county_name string, crs_code string")
+    return local_frame(spark, CRS_CODES, "county_name string, crs_code string")
 
 
 def _values_sql(rows: list[tuple[str, str]], alias: str, cols: tuple[str, str]) -> str:

@@ -684,7 +684,7 @@ def test_finding94_class_a_bounds_hold(spark, sf_dir):
         "id as vec_id", "array(cast(id as float)) as embedding"
     )
     with _pytest.raises(ValueError, match="MAX_QUERY_SIDE"):
-        sim._bounded_query_rows(big, "vec_id", "embedding")
+        sim._bounded_query_rows(big)
 
     # 2. codebook sample bound (source-level constant wired through
     # semantic_dedup's derived-cells cap)
@@ -744,3 +744,36 @@ def test_neardup_incremental_never_broadcasts(spark, sf_dir):
     # bands (band, bh) or base shingles (_db, sh_b) attributes — only
     # delta-side sorts remain
     assert not re.search(r"Sort \[(band#|_db#|sh_b#)", plan), plan[:3000]
+
+
+def test_driver_built_frames_are_local_table_scans(spark, sf_dir):
+    """Small frames built on the driver (the reference dimensions, the
+    stream lanes' results) are Arrow local tables. ``Scan ExistingRDD``
+    here means the build fell back to a Python list, which starts one
+    PythonRDD task per core on every read."""
+    from automated_property_data_ingestion_document_pipeline_spark import catalog
+    from automated_property_data_ingestion_document_pipeline_spark.sources import (
+        reference_dims as rd,
+    )
+
+    frames = {
+        "states": rd.states_df(spark),
+        "counties": rd.counties_df(spark),
+        "crs_codes": rd.crs_codes_df(spark),
+        "empty": catalog.local_frame(spark, [], "doc_id bigint, max_jaccard double"),
+        "q_stream_quarantine": QUERIES["q_stream_quarantine"](spark, sf_dir),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+def test_local_frame_keeps_nulls_types_and_empty_input(spark):
+    from automated_property_data_ingestion_document_pipeline_spark.catalog import local_frame
+
+    ddl = "k string, n bigint, x double"
+    df = local_frame(spark, [("a", None, 1.5), (None, 2**40, None)], ddl)
+    assert df.schema.simpleString() == "struct<k:string,n:bigint,x:double>"
+    assert [tuple(r) for r in df.collect()] == [("a", None, 1.5), (None, 2**40, None)]
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == df.schema and empty.collect() == []
