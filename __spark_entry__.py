@@ -101,7 +101,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # Also the PDF-reading lanes, whose lexers now jump by regex search
 # (same spans, so the extracted text must not change), and the lanes
 # whose result or reference dimensions are now built as Arrow local
-# tables (same rows and types).
+# tables (same rows and types). Then every oracle lane whose per-row
+# Python stage moved onto operators/rowmap.map_rows (same rows and
+# types; only the batch assembly changed).
 _MANUAL_PRIORITY: list[str] = [
     "q_semantic_dedup",
     "q_embedding_neardup_portable",
@@ -118,6 +120,24 @@ _MANUAL_PRIORITY: list[str] = [
     "q_ref_dim_join",
     "q_ref_crs_diff",
     "q_ref_state_coverage",
+    "q_image_stats",
+    "q_frame_stats",
+    "q_image_dhash_neardup",
+    "q_audio_energy",
+    "q_jpeg_stats",
+    "q_gif_stats",
+    "q_bmp_stats",
+    "q_zip_ingest",
+    "q_archive_decode",
+    "q_tiff_stats",
+    "q_wav_energy",
+    "q_mjpeg_stats",
+    "q_flac_energy",
+    "q_jpeg_progressive_stats",
+    "q_docx_extract",
+    "q_ref_template_extract",
+    "q_report_archive_extract",
+    "q_quarantine_stats",
 ]
 
 

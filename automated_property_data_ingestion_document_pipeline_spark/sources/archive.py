@@ -28,6 +28,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+from automated_property_data_ingestion_document_pipeline_spark.operators.rowmap import map_rows
+
 _MAX_MEMBER_BYTES = 256 * 1024 * 1024
 _MAX_TOTAL_BYTES = 1024 * 1024 * 1024
 _MAX_MEMBERS = 65_536
@@ -119,41 +121,23 @@ def _sniff(payload: bytes):
 
 def unpack_archive(df: DataFrame) -> DataFrame:
     """One input row (id, archive bytes) → one output row per member
-    ``(id, member_name, member_bytes, n_bytes)`` via mapInPandas — the
+    ``(id, member_name, member_bytes, n_bytes)`` via ``map_rows`` — the
     same executor-local flat-map shape as ``sample_frames``. The format
     is sniffed per payload (the PK magic marks a ZIP). NULL
     payloads produce no rows; malformed archives raise the typed
     :class:`ArchiveUnsupported` so callers can quarantine rather than
     lose the task."""
-    import pandas as pd
 
-    def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, blobs, sizes = [], [], [], []
-            for rid, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()
-            ):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                it = _sniff(payload)(payload)
-                for name, blob in it:
-                    ids.append(rid)
-                    names.append(name)
-                    blobs.append(blob)
-                    sizes.append(len(blob))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "member_name": names,
-                    "member_bytes": blobs,
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                }
-            )
+    def _unpack(rid, payload):
+        if payload is None:
+            return
+        for name, blob in _sniff(payload)(payload):
+            yield rid, name, blob, len(blob)
 
-    return df.mapInPandas(
-        _unpack,
+    return map_rows(
+        df.select("doc_id", "content"),
         "doc_id bigint, member_name string, member_bytes binary, n_bytes bigint",
+        _unpack,
     )
 
 

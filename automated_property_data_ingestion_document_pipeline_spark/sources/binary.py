@@ -16,10 +16,10 @@ real and tested either way.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from automated_property_data_ingestion_document_pipeline_spark.operators.rowmap import map_rows
 
 # metadata struct carried alongside every binary payload
 MEDIA_META_SCHEMA = (
@@ -53,7 +53,7 @@ def sample_frames(
 ) -> DataFrame:
     """Frame-sampling over video-typed binary columns: one input row →
     ``n_frames`` output rows ``(id, frame_idx, frame_bytes, frame_meta)``
-    via mapInPandas (a flat-mapping Arrow batch transform — the UDTF
+    via ``map_rows`` (a flat-mapping Arrow batch transform — the UDTF
     shape).
 
     ``fake=True`` slices the payload into n deterministic chunks.
@@ -66,54 +66,34 @@ def sample_frames(
     byte handling — is identical on both paths."""
     import hashlib
 
-    import pandas as pd
-
     from automated_property_data_ingestion_document_pipeline_spark.sources.avi import (
         AviUnsupported,
         avi_mjpeg_frames,
     )
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames, metas = [], [], [], []
-            # zip over columns, not iterrows (~5× per-row Series cost)
-            for rid, payload in zip(pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()):
-                if payload is None:
-                    continue  # NULL payload → no frames (nothing to decode)
-                payload = bytes(payload)
-                if not fake:
-                    try:
-                        all_frames, _w, _h = avi_mjpeg_frames(payload)
-                    except AviUnsupported as e:
-                        raise DecodeUnavailable(
-                            f"codec-compressed video not in this environment: {e}"
-                        ) from e
-                    if not all_frames:
-                        continue
-                    take = min(n_frames, len(all_frames))
-                    # evenly spaced keyframe-style sampling
-                    picks = [
-                        all_frames[(i * len(all_frames)) // take] for i in range(take)
-                    ]
-                    for i, fr in enumerate(picks):
-                        ids.append(rid)
-                        idxs.append(i)
-                        frames.append(fr)
-                        metas.append(hashlib.sha256(fr).hexdigest()[:16])
-                    continue
-                step = max(len(payload) // n_frames, 1)
-                for i in range(n_frames):
-                    chunk = payload[i * step : (i + 1) * step] or b"\x00"
-                    ids.append(rid)
-                    idxs.append(i)
-                    frames.append(chunk)
-                    metas.append(hashlib.sha256(chunk).hexdigest()[:16])
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_bytes": frames, "frame_key": metas}
-            )
+    def _sample(rid, payload):
+        if payload is None:
+            return  # NULL payload → no frames (nothing to decode)
+        if fake:
+            step = max(len(payload) // n_frames, 1)
+            frames = [payload[i * step : (i + 1) * step] or b"\x00" for i in range(n_frames)]
+        else:
+            try:
+                all_frames, _w, _h = avi_mjpeg_frames(payload)
+            except AviUnsupported as e:
+                raise DecodeUnavailable(
+                    f"codec-compressed video not in this environment: {e}"
+                ) from e
+            take = min(n_frames, len(all_frames))
+            # evenly spaced keyframe-style sampling
+            frames = [all_frames[(i * len(all_frames)) // take] for i in range(take)]
+        for i, fr in enumerate(frames):
+            yield rid, i, fr, hashlib.sha256(fr).hexdigest()[:16]
 
-    return df.mapInPandas(
-        _sample, "doc_id bigint, frame_idx int, frame_bytes binary, frame_key string"
+    return map_rows(
+        df.select("doc_id", "content"),
+        "doc_id bigint, frame_idx int, frame_bytes binary, frame_key string",
+        _sample,
     )
 
 
@@ -133,8 +113,6 @@ def resize_image(
     boundary now excludes every still-image path. Bytes never leave
     the executor; fan-in/fan-out is row-local mapInPandas, the same
     shape PIL/ffmpeg would slot into."""
-    import pandas as pd
-
     from automated_property_data_ingestion_document_pipeline_spark.sources.bmp import (
         BmpUnsupported,
         decode_bmp,
@@ -176,45 +154,22 @@ def resize_image(
         except TiffUnsupported:
             return decode_jpeg(payload)  # JpegUnsupported → pass-through
 
-    out_schema = (
-        f"doc_id bigint, content binary, decoded boolean, "
-        "height int, width int, channels int"
+    def _resize(rid, payload):
+        if payload is None:
+            return
+        try:
+            px = resize_nearest(_decode_any(payload), target_h, target_w)
+            out = (encode_png(px), True, *px.shape)
+        except (PngUnsupported, GifUnsupported, BmpUnsupported,
+                TiffUnsupported, JpegUnsupported):
+            out = (payload, False, None, None, None)  # undecodable format: pass through
+        yield (rid, *out)
+
+    return map_rows(
+        df.select("doc_id", "content"),
+        "doc_id bigint, content binary, decoded boolean, height int, width int, channels int",
+        _resize,
     )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs, dec, hs, ws, cs = [], [], [], [], [], []
-            for rid, payload in zip(pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                try:
-                    px = resize_nearest(_decode_any(payload), target_h, target_w)
-                    outs.append(encode_png(px))
-                    dec.append(True)
-                    hs.append(px.shape[0])
-                    ws.append(px.shape[1])
-                    cs.append(px.shape[2])
-                except (PngUnsupported, GifUnsupported, BmpUnsupported,
-                        TiffUnsupported, JpegUnsupported):
-                    outs.append(payload)  # undecodable format: pass through
-                    dec.append(False)
-                    hs.append(None)
-                    ws.append(None)
-                    cs.append(None)
-                ids.append(rid)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "content": outs,
-                    "decoded": pd.Series(dec, dtype="bool"),
-                    "height": pd.Series(hs, dtype="Int32"),
-                    "width": pd.Series(ws, dtype="Int32"),
-                    "channels": pd.Series(cs, dtype="Int32"),
-                }
-            )
-
-    return df.mapInPandas(_resize, out_schema)
 
 
 def chunk_audio(
@@ -240,8 +195,6 @@ def chunk_audio(
     contract as sample_frames: bytes stay executor-local, fan-out is
     row-local, output rows carry exact millisecond spans for
     downstream window-joins against transcripts."""
-    import pandas as pd
-
     from automated_property_data_ingestion_document_pipeline_spark.sources.wav import (
         WavUnsupported,
         wav_pcm_info,
@@ -250,52 +203,33 @@ def chunk_audio(
     chunk_bytes_n = int(sample_rate * bytes_per_sample * chunk_seconds)
     ms_per_byte = 1000.0 / (sample_rate * bytes_per_sample)
 
-    def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, starts, ends, chunks = [], [], [], [], []
-            for rid, payload in zip(pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                if not fake:
-                    try:
-                        payload, rate, block_align = wav_pcm_info(payload)
-                    except WavUnsupported as e:
-                        raise DecodeUnavailable(
-                            f"compressed audio codec not in this environment: {e}"
-                        ) from e
-                    n_frames_chunk = max(int(rate * chunk_seconds), 1)
-                    cb = n_frames_chunk * block_align
-                    mpb = 1000.0 / (rate * block_align)
-                else:
-                    cb = chunk_bytes_n
-                    mpb = ms_per_byte
-                # zero-length payload → one empty chunk, emitted AS-IS:
-                # substituting b"\x00" would break reassembly
-                # (concat(chunk_bytes) != payload) and disagree with the
-                # end_ms computed from len(seg)=0 (ADVICE r03); Arrow
-                # handles empty binary values fine.
-                n = max((len(payload) + cb - 1) // cb, 1)
-                for i in range(n):
-                    seg = payload[i * cb : (i + 1) * cb]
-                    ids.append(rid)
-                    idxs.append(i)
-                    starts.append(int(i * cb * mpb))
-                    ends.append(int((i * cb + len(seg)) * mpb))
-                    chunks.append(seg)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_idx": idxs,
-                    "start_ms": starts,
-                    "end_ms": ends,
-                    "chunk_bytes": chunks,
-                }
-            )
+    def _chunk(rid, payload):
+        if payload is None:
+            return
+        if fake:
+            cb, mpb = chunk_bytes_n, ms_per_byte
+        else:
+            try:
+                payload, rate, block_align = wav_pcm_info(payload)
+            except WavUnsupported as e:
+                raise DecodeUnavailable(
+                    f"compressed audio codec not in this environment: {e}"
+                ) from e
+            cb = max(int(rate * chunk_seconds), 1) * block_align
+            mpb = 1000.0 / (rate * block_align)
+        # zero-length payload → one empty chunk, emitted AS-IS:
+        # substituting b"\x00" would break reassembly
+        # (concat(chunk_bytes) != payload) and disagree with the
+        # end_ms computed from len(seg)=0 (ADVICE r03); Arrow
+        # handles empty binary values fine.
+        for i in range(max((len(payload) + cb - 1) // cb, 1)):
+            seg = payload[i * cb : (i + 1) * cb]
+            yield rid, i, int(i * cb * mpb), int((i * cb + len(seg)) * mpb), seg
 
-    return df.mapInPandas(
-        _chunk,
+    return map_rows(
+        df.select("doc_id", "content"),
         "doc_id bigint, chunk_idx int, start_ms bigint, end_ms bigint, chunk_bytes binary",
+        _chunk,
     )
 
 
@@ -313,68 +247,31 @@ def extract_document_text(df: DataFrame) -> DataFrame:
     message') instead of failing the task: one bad blob among billions
     costs a row, not a stage retry (the 100 TB document-ingest shape;
     reference S5 upload → report_generator read path). Row-local
-    Arrow mapInPandas, bytes never leave the executor."""
-    import pandas as pd
-
-    out_schema = (
-        f"doc_id bigint, kind string, n_items bigint, n_chars bigint, "
-        "text string, error string"
+    ``map_rows``, bytes never leave the executor."""
+    from automated_property_data_ingestion_document_pipeline_spark.sources.doc_sink import (
+        DocxUnsupported,
+        extract_docx_text,
+    )
+    from automated_property_data_ingestion_document_pipeline_spark.sources.pdf_sink import (
+        PdfUnsupported,
+        extract_pdf_text,
     )
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from automated_property_data_ingestion_document_pipeline_spark.sources.doc_sink import (
-            DocxUnsupported,
-            extract_docx_text,
-        )
-        from automated_property_data_ingestion_document_pipeline_spark.sources.pdf_sink import (
-            PdfUnsupported,
-            extract_pdf_text,
-        )
+    def _extract(rid, payload):
+        payload = b"" if payload is None else payload
+        try:
+            if payload.startswith(b"%PDF-"):
+                kind, lines = "pdf", extract_pdf_text(payload)
+            elif payload[:2] == b"PK":
+                kind, lines = "docx", extract_docx_text(payload)
+            else:
+                raise UnsupportedDocumentFormat("no PDF header or OOXML zip magic")
+        except (PdfUnsupported, DocxUnsupported, UnsupportedDocumentFormat) as e:
+            return [(rid, None, None, None, None, f"{type(e).__name__}: {e}")]
+        return [(rid, kind, len(lines), sum(len(x) for x in lines), "\n".join(lines), None)]
 
-        for pdf in batches:
-            cols: dict = {
-                "doc_id": [], "kind": [], "n_items": [], "n_chars": [],
-                "text": [], "error": [],
-            }
-            for rid, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["content"].to_numpy()
-            ):
-                payload = b"" if payload is None else bytes(payload)
-                kind = items = chars = text = err = None
-                try:
-                    if payload.startswith(b"%PDF-"):
-                        kind = "pdf"
-                        lines = extract_pdf_text(payload)
-                    elif payload[:2] == b"PK":
-                        kind = "docx"
-                        lines = extract_docx_text(payload)
-                    else:
-                        raise UnsupportedDocumentFormat(
-                            "no PDF header or OOXML zip magic"
-                        )
-                    items = len(lines)
-                    chars = sum(len(x) for x in lines)
-                    text = "\n".join(lines)
-                except (
-                    PdfUnsupported, DocxUnsupported, UnsupportedDocumentFormat
-                ) as e:
-                    kind = text = None
-                    err = f"{type(e).__name__}: {e}"
-                cols["doc_id"].append(int(rid))
-                cols["kind"].append(kind)
-                cols["n_items"].append(items)
-                cols["n_chars"].append(chars)
-                cols["text"].append(text)
-                cols["error"].append(err)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                    "kind": cols["kind"],
-                    "n_items": pd.Series(cols["n_items"], dtype="Int64"),
-                    "n_chars": pd.Series(cols["n_chars"], dtype="Int64"),
-                    "text": cols["text"],
-                    "error": cols["error"],
-                }
-            )
-
-    return df.mapInPandas(_extract, out_schema)
+    return map_rows(
+        df.select("doc_id", "content"),
+        "doc_id bigint, kind string, n_items bigint, n_chars bigint, text string, error string",
+        _extract,
+    )

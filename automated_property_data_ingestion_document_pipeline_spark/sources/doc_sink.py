@@ -27,6 +27,8 @@ from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
 
+from automated_property_data_ingestion_document_pipeline_spark.operators.rowmap import map_rows
+
 try:  # executor-local optional dep; the built-in OOXML writer is default
     import docxtpl  # type: ignore  # noqa: F401
 
@@ -125,49 +127,54 @@ def render_docx(context: dict) -> bytes:
     return docx_bytes_from_lines(render_template_lines(context))
 
 
+_MANIFEST_DDL = (
+    "client_key string, filename string, n_bytes bigint, media_type string, status string"
+)
+
+
+def write_letters(
+    letters: DataFrame, out_dir: str, ext: str, media_type: str, render
+) -> DataFrame:
+    """The letter sinks' shared body: one artifact per row of ``letters``
+    (``client_key`` first, then the columns ``render`` takes), written
+    executor-side to ``out_dir/Engagement_Letter_<client_key>.<ext>``,
+    and one manifest row (client_key, filename, n_bytes, media_type,
+    status) back. ``render`` returns the artifact bytes, or None when
+    the row has nothing to render. A NULL key or a None render is a
+    manifest-only ``skipped_null`` row, never a 'None'-named artifact
+    ('Engagement_Letter_None.docx'; the formatter layer's
+    NULL-propagation contract, r02 advice)."""
+
+    def _render(client_key, *values):
+        os.makedirs(out_dir, exist_ok=True)
+        payload = None if client_key is None else render(*values)
+        if payload is None:
+            return [(client_key, None, 0, media_type, "skipped_null")]
+        filename = f"Engagement_Letter_{client_key}.{ext}"
+        with open(os.path.join(out_dir, filename), "wb") as f:
+            f.write(payload)
+        return [(client_key, filename, len(payload), media_type, "ok")]
+
+    return map_rows(letters, _MANIFEST_DDL, _render)
+
+
 def render_letters(letters: DataFrame, out_dir: str) -> DataFrame:
     """Render one real .docx artifact per row (letter_text lines → OOXML
     paragraphs via the built-in writer) and return a manifest DataFrame
     (client_key, filename, n_bytes, media_type, status).
 
-    Runs entirely executor-side via mapInPandas: bytes are produced and
-    written inside the partition (no driver collect), the standard Spark
-    document-sink shape — parallelizes embarrassingly like the
-    reference's soffice convert (report_generator.py:92-103) never could.
+    Runs entirely executor-side (:func:`write_letters`): bytes are
+    produced and written inside the partition (no driver collect), the
+    standard Spark document-sink shape — parallelizes embarrassingly
+    like the reference's soffice convert (report_generator.py:92-103)
+    never could. A NULL letter_text is skipped like a NULL key.
     """
 
-    def _render(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _docx(text):
+        return None if text is None else docx_bytes_from_lines(text.split("\n"))
 
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            rows = []
-            # zip over columns, not iterrows (~5× per-row Series cost)
-            for client_key, text in zip(
-                pdf["client_key"].to_numpy(), pdf["letter_text"].to_numpy()
-            ):
-                # NULL key/text must not render a literal 'None' artifact
-                # ('Engagement_Letter_None.docx') — honor the formatter
-                # layer's NULL-propagation contract (r02 advice): no file,
-                # manifest row records the skip.
-                if pd.isna(client_key) or pd.isna(text):
-                    rows.append((client_key, None, 0, DOCX_MEDIA_TYPE, "skipped_null"))
-                    continue
-                filename = f"Engagement_Letter_{client_key}.docx"
-                payload = docx_bytes_from_lines(str(text).split("\n"))
-                path = os.path.join(out_dir, filename)
-                with open(path, "wb") as f:
-                    f.write(payload)
-                rows.append((client_key, filename, len(payload), DOCX_MEDIA_TYPE, "ok"))
-            yield pd.DataFrame(
-                rows,
-                columns=["client_key", "filename", "n_bytes", "media_type", "status"],
-            )
-
-    return letters.mapInPandas(
-        _render,
-        "client_key string, filename string, n_bytes bigint, media_type string, "
-        "status string",
+    return write_letters(
+        letters.select("client_key", "letter_text"), out_dir, "docx", DOCX_MEDIA_TYPE, _docx
     )
 
 
@@ -190,37 +197,21 @@ def render_letters_from_context(letters: DataFrame, out_dir: str) -> DataFrame:
     presentation is owned upstream exactly like the reference's locked
     context) plus ``client_key``; every ``{{placeholder}}`` in the
     template is substituted, unknown placeholders render empty. Returns
-    the same manifest shape as :func:`render_letters`."""
+    the same manifest shape as :func:`render_letters`; a NULL key skips
+    the row, NULL context fields render as ''."""
 
-    def _render(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _context(*values):
+        return render_docx(_letter_context(values))
 
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            rows = []
-            cols = {c: pdf[c].to_numpy() for c in LETTER_CONTEXT_COLS}
-            for i, client_key in enumerate(pdf["client_key"].to_numpy()):
-                # NULL-key rows skip rendering (no 'None'-named artifact,
-                # r02 advice); NULL context fields still render as ''.
-                if pd.isna(client_key):
-                    rows.append((client_key, None, 0, DOCX_MEDIA_TYPE, "skipped_null"))
-                    continue
-                context = {c: ("" if cols[c][i] is None else cols[c][i]) for c in cols}
-                payload = render_docx(context)
-                filename = f"Engagement_Letter_{client_key}.docx"
-                with open(os.path.join(out_dir, filename), "wb") as f:
-                    f.write(payload)
-                rows.append((client_key, filename, len(payload), DOCX_MEDIA_TYPE, "ok"))
-            yield pd.DataFrame(
-                rows,
-                columns=["client_key", "filename", "n_bytes", "media_type", "status"],
-            )
-
-    return letters.mapInPandas(
-        _render,
-        "client_key string, filename string, n_bytes bigint, media_type string, "
-        "status string",
+    return write_letters(
+        letters.select("client_key", *LETTER_CONTEXT_COLS), out_dir, "docx", DOCX_MEDIA_TYPE,
+        _context,
     )
+
+
+def _letter_context(values: tuple) -> dict:
+    """The LETTER_CONTEXT_COLS values of one row as a render context."""
+    return {c: "" if v is None else v for c, v in zip(LETTER_CONTEXT_COLS, values)}
 
 
 # Split-run-aware placeholder span: Word routinely fragments '{{key}}'
@@ -277,32 +268,12 @@ def render_letters_from_template(
     scan (the reference re-reads template.docx per record,
     report_generator.py:57-70; here it rides the task broadcast)."""
 
-    def _render(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _template(*values):
+        return render_docx_from_template(template_bytes, _letter_context(values))
 
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            rows = []
-            cols = {c: pdf[c].to_numpy() for c in LETTER_CONTEXT_COLS}
-            for i, client_key in enumerate(pdf["client_key"].to_numpy()):
-                if pd.isna(client_key):
-                    rows.append((client_key, None, 0, DOCX_MEDIA_TYPE, "skipped_null"))
-                    continue
-                context = {c: ("" if cols[c][i] is None else cols[c][i]) for c in cols}
-                payload = render_docx_from_template(template_bytes, context)
-                filename = f"Engagement_Letter_{client_key}.docx"
-                with open(os.path.join(out_dir, filename), "wb") as f:
-                    f.write(payload)
-                rows.append((client_key, filename, len(payload), DOCX_MEDIA_TYPE, "ok"))
-            yield pd.DataFrame(
-                rows,
-                columns=["client_key", "filename", "n_bytes", "media_type", "status"],
-            )
-
-    return letters.mapInPandas(
-        _render,
-        "client_key string, filename string, n_bytes bigint, media_type string, "
-        "status string",
+    return write_letters(
+        letters.select("client_key", *LETTER_CONTEXT_COLS), out_dir, "docx", DOCX_MEDIA_TYPE,
+        _template,
     )
 
 

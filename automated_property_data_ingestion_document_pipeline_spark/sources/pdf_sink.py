@@ -19,7 +19,6 @@ as doc_sink.docx_bytes_from_lines).
 
 from __future__ import annotations
 
-import os
 import re
 from collections.abc import Iterator
 
@@ -514,8 +513,6 @@ def pdf_incremental_update(base: bytes, replacements: "dict[int, bytes]") -> byt
     signed/edited PDFs carry in the wild, and the first-party fixture
     for the extractor's latest-generation-wins object resolution
     (PERFORMANCE.md finding 82)."""
-    import re
-
     m = None
     for m in re.finditer(rb"startxref\s+(\d+)", base):
         pass
@@ -694,8 +691,6 @@ def _stream_length(dct: bytes, idx: "_ObjIndex") -> int:
     indirect ``N G R`` reference is resolved through the object index
     (object N's body is a bare integer). Anything else is a typed
     refusal."""
-    import re
-
     lm = re.search(rb"/Length\s+(\d+)(?![0-9])(?:\s+(\d+)\s+R)?", dct)
     if lm is None:
         raise PdfUnsupported("stream dictionary without direct /Length")
@@ -890,8 +885,6 @@ class _ObjIndex:
             self._extract_objstm(refs)
 
     def _scan_trailers_for_encrypt(self) -> None:
-        import re
-
         # _note_encrypt is first-sighting-wins (matching the newest-
         # first chain walk), and in file order the newest trailer — an
         # incremental update's — comes LAST: visit candidates by
@@ -954,8 +947,6 @@ class _ObjIndex:
         dict. The chain walks newest-first, so the FIRST sighting wins
         (an incremental update's security state supersedes the
         original's)."""
-        import re
-
         em = re.search(rb"/Encrypt\s+(\d+)\s+\d+\s+R", trailer)
         if em is not None:
             self.encrypted = True
@@ -987,8 +978,6 @@ class _ObjIndex:
         pairs, slice member bodies. A broken container is a typed
         refusal only for its own members at use time (they simply stay
         missing), matching the per-object quarantine philosophy."""
-        import re
-
         if not stm_refs:
             return
         by_container: dict[int, list[tuple[int, int]]] = {}
@@ -1028,8 +1017,6 @@ class _ObjIndex:
                 self._inline_order.append(num)
 
     def _scan(self) -> dict[int, int]:
-        import re
-
         payload = self.payload
         best: dict[int, tuple[int, int]] = {}  # num -> (gen, body offset)
         consumed_to = 0
@@ -1072,8 +1059,6 @@ class _ObjIndex:
         streams queue their /Prev. A malformed section stops the walk
         (scan backstop takes over) without discarding sections already
         parsed."""
-        import re
-
         payload = self.payload
         sx = payload.rfind(b"startxref")
         if sx == -1:
@@ -1114,8 +1099,6 @@ class _ObjIndex:
         """One classic ``xref`` table + trailer at ``pos``; fills
         ``entries`` (first writer per num wins — newest-first walk) and
         returns follow-up positions (/XRefStm first, then /Prev)."""
-        import re
-
         payload = self.payload
         i = pos + 4
         while True:
@@ -1169,7 +1152,6 @@ class _ObjIndex:
         optional PNG /Predictor. /Length must be direct (resolving an
         indirect length needs the index being built — real writers emit
         direct). Returns the /Prev follow-up, if any."""
-        import re
         import zlib
 
         payload = self.payload
@@ -1261,8 +1243,6 @@ def _pages(idx: "_ObjIndex") -> list[tuple[list[int], bytes]]:
     OPTIONAL per the spec — a blank page contributes no lines, r07
     advice). Empty when the payload has no page dictionaries — the
     walk-every-stream fallback's trigger."""
-    import re
-
     payload = idx.payload
     pages: list[tuple[list[int], bytes]] = []
     for num, body in idx.objects_in_order():
@@ -1367,8 +1347,6 @@ def _ascii85_decode(data: bytes) -> bytes:
     """PDF /ASCII85Decode (§7.4.3): base-85 groups ending at ``~>``,
     whitespace ignored, ``z`` shorthand for four zero bytes."""
     import base64
-    import re
-
     end = data.find(b"~>")
     chunk = data[:end] if end != -1 else data
     chunk = re.sub(rb"\s+", b"", chunk)
@@ -1444,8 +1422,6 @@ def _decode_parms_list(
     Indirect references (``N G R``, §7.3.10) resolve through the
     object index — as a dict object, the only shape predictor parms
     take in the wild."""
-    import re
-
     km = re.search(rb"/(?:DecodeParms|DP)(?![A-Za-z])\s*", dct)
     if km is None:
         return [None] * n
@@ -1524,8 +1500,6 @@ def _apply_filters(
     /EarlyChange on LZW, PNG /Predictor + /Columns on Flate/LZW. Any
     filter outside the battery (DCTDecode, CCITT, JBIG2, Crypt, …) is
     a typed refusal — image codecs don't belong in a text extractor."""
-    import re
-
     fm = re.search(rb"/Filter\s*(/\w+|\[(?:\s*/\w+)*\s*\])", dct)
     if fm is None:
         if b"/Filter" in dct:
@@ -1571,8 +1545,6 @@ def _stream_body(
     chain through the capped decoder battery (r06 advice — bomb
     guards; r08 — Flate/LZW/ASCII85/ASCIIHex/RunLength + chains +
     predictors), refuse any other filter. Returns (bytes, end)."""
-    import re
-
     payload = idx.payload
     length = _stream_length(dct, idx)
     if length > _MAX_STREAM_BYTES:
@@ -1599,8 +1571,6 @@ def _object_stream(idx: "_ObjIndex", num: int) -> bytes:
     scanned with balanced ``<< >>``, body sliced/validated/inflated by
     :func:`_stream_body`). Spec §7.5.7 forbids streams inside object
     streams, so an inline member here is a typed refusal."""
-    import re
-
     if idx.inline_body(num) is not None:
         raise PdfUnsupported(f"object {num} is an ObjStm member, cannot be a stream")
     payload = idx.payload
@@ -1651,8 +1621,6 @@ def _parse_tounicode(data: bytes) -> tuple[int, dict[int, str]]:
     forms (incrementing scalar and explicit array), and takes the code
     width from ``codespacerange`` (default 2 — Identity-H CIDs).
     Destination hex is UTF-16BE."""
-    import re
-
     def uni(hx: bytes) -> str:
         if len(hx) % 2:
             hx += b"0"
@@ -1696,8 +1664,6 @@ def _page_fonts(
     ``/Fn N 0 R`` font object's /ToUnicode stream. A font without a
     CMap maps to None — literal strings through it still extract
     (WinAnsi bytes); hex strings through it are a typed refusal."""
-    import re
-
     def sub_dict(container: bytes, key: bytes) -> bytes | None:
         km = re.search(key + rb"\s*(?:(\d+)\s+\d+\s+R|<<)", container)
         if km is None:
@@ -1914,8 +1880,6 @@ def _text_ops(
 def _pdf_string_value(dct: bytes, key: bytes) -> "bytes | None":
     """The raw byte value of ``/key (literal)`` or ``/key <hex>`` in a
     dictionary — escapes resolved, hex decoded. None when absent."""
-    import re
-
     # (?![A-Za-z]) so /O can never match the /OE (AES-256) field, /U
     # never /UE — the v>=5 refusal fires first today, but the parser
     # must not depend on caller ordering for correctness
@@ -1942,8 +1906,6 @@ def _named_crypt_filter(enc: bytes, name: bytes) -> "bytes | None":
     so a wrong-cipher decrypt of an uncompressed stream would emit
     garbage rows instead of a typed refusal). None when /CF or the
     named entry is absent."""
-    import re
-
     cf = re.search(rb"/CF\s*<<", enc)
     if cf is None:
         return None
@@ -1970,8 +1932,6 @@ def _setup_decryption(idx: "_ObjIndex", password: bytes = b"") -> None:
     every real reader uses). Everything else is a typed
     refusal: wrong passwords, non-Standard handlers, unknown /CFM;
     /Identity leaves streams plaintext (no decryptor)."""
-    import re
-
     from automated_property_data_ingestion_document_pipeline_spark.sources import pdf_crypt
 
     if idx.encrypt_ref is None:
@@ -2141,8 +2101,6 @@ def extract_pdf_text(payload: bytes, password: "bytes | str | None" = None) -> l
     CONTENT stream, corrupt deflate, or a broken xref/object graph all
     raise typed :class:`PdfUnsupported` — the codec modules' contract,
     so executor tasks quarantine rather than die."""
-    import re
-
     payload = bytes(payload)
     if not payload.startswith(b"%PDF-"):
         raise PdfUnsupported("not a PDF header")
@@ -2234,37 +2192,16 @@ def render_letters_pdf(letters: DataFrame, out_dir: str) -> DataFrame:
     """Render one real .pdf artifact per row (letter_text lines → PDF
     paragraphs) and return the same manifest shape as
     doc_sink.render_letters: (client_key, filename, n_bytes, media_type,
-    status). Executor-side via mapInPandas — the reference's
+    status). Executor-side via doc_sink.write_letters — the reference's
     one-subprocess-per-record soffice loop (report_generator.py:92-103)
     becomes an embarrassingly parallel pure-Python map."""
+    from automated_property_data_ingestion_document_pipeline_spark.sources.doc_sink import (
+        write_letters,
+    )
 
-    def _render(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _pdf(text):
+        return None if text is None else pdf_bytes_from_lines(text.split("\n"))
 
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf_batch in batches:
-            rows = []
-            for client_key, text in zip(
-                pdf_batch["client_key"].to_numpy(),
-                pdf_batch["letter_text"].to_numpy(),
-            ):
-                # NULL key/text → manifest-only skip, never a 'None'
-                # artifact (r02 advice; mirrors doc_sink.render_letters)
-                if pd.isna(client_key) or pd.isna(text):
-                    rows.append((client_key, None, 0, PDF_MEDIA_TYPE, "skipped_null"))
-                    continue
-                filename = f"Engagement_Letter_{client_key}.pdf"
-                payload = pdf_bytes_from_lines(str(text).split("\n"))
-                with open(os.path.join(out_dir, filename), "wb") as f:
-                    f.write(payload)
-                rows.append((client_key, filename, len(payload), PDF_MEDIA_TYPE, "ok"))
-            yield pd.DataFrame(
-                rows,
-                columns=["client_key", "filename", "n_bytes", "media_type", "status"],
-            )
-
-    return letters.mapInPandas(
-        _render,
-        "client_key string, filename string, n_bytes bigint, media_type string, "
-        "status string",
+    return write_letters(
+        letters.select("client_key", "letter_text"), out_dir, "pdf", PDF_MEDIA_TYPE, _pdf
     )

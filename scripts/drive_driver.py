@@ -1,9 +1,9 @@
 """Simulate the driver: plain SparkSession, entry() smoke, per-key oracle compare at sf0.01."""
-import json, math, sys, time
+import json, math, os, sys, time
 from pyspark.sql import SparkSession
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as m
 
 # Driver-like session: NO tuning applied here; the package must self-tune.
@@ -16,7 +16,6 @@ rows = df.collect()
 print(f"ENTRY: {len(rows)} rows in {time.time()-t0:.1f}s schema={df.columns}")
 print("  sample:", rows[0])
 
-import os
 SF = os.environ.get("DRIVE_SF", "/root/testdata/sf0.01")
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
